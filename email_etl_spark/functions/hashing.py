@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from email_etl_spark.functions import built_once
+
 N_GROUPS = 8           # md5 calls per shingle
 LANES_PER_GROUP = 4    # 8-hex-char slices per md5
 N_LANES = N_GROUPS * LANES_PER_GROUP  # 32 minhash lanes
@@ -138,22 +140,21 @@ def band_key(sig_cols: list[Column], band: int) -> Column:
 # bits of a well-mixed hash), exactly the independence argument the
 # 4-slices-per-md5 scheme already relies on.
 #
-# The whole bands array is ONE parsed SQL expression, module-cached:
-# composing it from ~100 pyspark Column calls costs ~0.5-0.7 s of
-# py4j round-trips PER BUILDER CALL (measured: dedup_minhash spent
-# 0.74 s of its 1.3 s steady-state in builder() construction), and
-# the flat 32-column lane form also analyzes/codegens a much larger
-# Catalyst tree. One F.expr + a dict hit removes both (dedup_minhash
-# 1.43 s -> 0.67 s best, interleaved A/B, identical bucket keys).
-# Caching a CONSTANT expression fragment is the _planes_literal /
-# _LIT_CACHE convention — plan structure, never data.
+# The whole bands array is ONE parsed SQL expression, built once per
+# process (functions.built_once): composing it from ~100 pyspark
+# Column calls costs ~0.5-0.7 s of py4j round-trips PER BUILDER CALL
+# (measured: dedup_minhash spent 0.74 s of its 1.3 s steady-state in
+# builder() construction), and the flat 32-column lane form also
+# analyzes/codegens a much larger Catalyst tree. One F.expr built once
+# removes both (dedup_minhash 1.43 s -> 0.67 s best, interleaved A/B,
+# identical bucket keys). Memoizing a CONSTANT expression fragment
+# holds plan structure, never data.
 # ---------------------------------------------------------------------------
 
 CAND_GROUPS = N_LANES // 2  # xxhash64 calls per shingle
 
-_EXPR_CACHE: dict = {}
 
-
+@built_once
 def cand_bands(sh_col: str = "sh") -> Column:
     """array<struct<band:int,key:bigint>> of candidate band keys for a
     shingle-array column: band i's key = (min hi32)<<32 | (min lo32)
@@ -161,17 +162,13 @@ def cand_bands(sh_col: str = "sh") -> Column:
     group's hash array once per row (the lambda argument binds once;
     both minima read the bound value), so hash work is identical to
     the flat-lane form: CAND_GROUPS xxhash64 passes per shingle set."""
-    col = _EXPR_CACHE.get(("cand_bands", sh_col))
-    if col is None:
-        col = F.expr(
-            f"transform(transform(sequence(0, {CAND_GROUPS - 1}),"
-            f" g -> transform({sh_col}, s -> xxhash64(g, s))),"
-            f" (arr, i) -> struct(i as band,"
-            f" shiftleft(array_min(transform(arr, v -> shiftrightunsigned(v, 32))), 32)"
-            f" | array_min(transform(arr, v -> v & 4294967295)) as key))"
-        )
-        _EXPR_CACHE[("cand_bands", sh_col)] = col
-    return col
+    return F.expr(
+        f"transform(transform(sequence(0, {CAND_GROUPS - 1}),"
+        f" g -> transform({sh_col}, s -> xxhash64(g, s))),"
+        f" (arr, i) -> struct(i as band,"
+        f" shiftleft(array_min(transform(arr, v -> shiftrightunsigned(v, 32))), 32)"
+        f" | array_min(transform(arr, v -> v & 4294967295)) as key))"
+    )
 
 
 def hyperplanes(n_tables: int, n_bits: int, dim: int) -> list[list[list[float]]]:

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from email_etl_spark.functions import built_once
 from email_etl_spark.functions.text import SUSPICIOUS_PATTERNS
 
 MAX_ATTACHMENT_BYTES = 25 * 1024 * 1024  # ref: config.MAX_ATTACHMENT_SIZE_BYTES
@@ -81,14 +82,20 @@ def attachment_report(emails: DataFrame) -> DataFrame:
     )
 
 
-def flag_suspicious_content(emails: DataFrame, body_col: str = "body_markdown") -> DataFrame:
-    """Add suspicious-content columns to the email frame
-    (ref: validate_email_content, src/security.py:180-212)."""
+@built_once
+def _suspicious_columns(body_col: str) -> tuple[Column, Column]:
+    """(suspicious_hits, is_suspicious) for flag_suspicious_content,
+    built once per body column (functions.built_once)."""
     lowered = F.lower(F.coalesce(F.col(body_col), F.lit("")))
     hits = None
     for p in SUSPICIOUS_PATTERNS:
         h = F.when(F.regexp_count(lowered, F.lit(p)) > 0, 1).otherwise(0)
         hits = h if hits is None else hits + h
-    return emails.withColumn("suspicious_hits", hits).withColumn(
-        "is_suspicious", F.col("suspicious_hits") > 0
-    )
+    return hits, F.col("suspicious_hits") > 0
+
+
+def flag_suspicious_content(emails: DataFrame, body_col: str = "body_markdown") -> DataFrame:
+    """Add suspicious-content columns to the email frame
+    (ref: validate_email_content, src/security.py:180-212)."""
+    hits, flagged = _suspicious_columns(body_col)
+    return emails.withColumn("suspicious_hits", hits).withColumn("is_suspicious", flagged)

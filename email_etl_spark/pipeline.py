@@ -8,10 +8,24 @@ list_messages + per-message fetch   → a raw-payload DataFrame (any
                                       source; lands in object storage)
 already-processed check (DB lookup) → left-anti join on message_id
 security validation per attachment  → operators/security.py column rules
-INSERT ... ON CONFLICT              → append + keep-latest view
 embedding batches (OpenAI)          → llm/stub.py pandas_udf seam
-markdown save + index.json          → sinks/markdown.py partitioned write
+stats bookkeeping                   → Dataset.observe counters on the raw,
+                                      parsed and new rows, fired by the
+                                      one job that materializes the new rows
+markdown save + index.json          → sinks/markdown.py partitioned append
 audit log rows                      → append-only parquet audit table
+INSERT ... ON CONFLICT              → append + keep-latest view
+
+One pass over the input: run_import and run_incremental_sync
+materialize the new rows (a local checkpoint) in ONE job, which also
+fires the raw / parsed / new counters, and every sink reads those
+rows. The sinks run in a fixed order: markdown, audit, then the
+emails table last, because the emails table is the commit point: the
+next import's anti-join skips exactly the rows it holds, so they go
+in only once their archive documents and audit rows are written. The
+new rows are checkpointed rather than cached for the same table: an
+append refreshes every cached plan that reads its path, and a cached
+anti-join against it would recompute as empty.
 
 Every stage is a DataFrame→DataFrame function: at 100 TB the same
 code runs as one lineage with no driver-side per-message loop, and
@@ -26,10 +40,27 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from email_etl_spark.functions import built_once
+from email_etl_spark.io import observe_counters
 from email_etl_spark.llm.stub import embed_documents, prepare_email_text
 from email_etl_spark.operators.security import flag_suspicious_content
 from email_etl_spark.sinks.markdown import write_markdown_tree
 from email_etl_spark.sources.email_source import parse_gmail_json
+
+
+@built_once
+def _stage_columns() -> dict:
+    """The pipeline's own plan constants (functions.built_once)."""
+    return {
+        "has_id": F.col("message_id").isNotNull(),
+        "embed_text": prepare_email_text(F.col("subject"), F.col("sender"), F.col("body_markdown")),
+        "rows": F.count(F.lit(1)),
+        "audit": (
+            F.col("message_id"),
+            F.lit("imported").alias("action"),
+            F.current_timestamp().alias("at"),
+        ),
+    }
 
 
 class EmailETLPipeline:
@@ -44,10 +75,13 @@ class EmailETLPipeline:
 
     # -- storage ----------------------------------------------------------
     def _existing(self) -> DataFrame | None:
-        try:
-            return self.spark.read.parquet(self.emails_path)
-        except Exception:
+        """The emails table, or None before the first import. The path
+        is probed rather than read and caught: a failed read is a
+        failed query, which a registered Observation logs as an ERROR."""
+        path = self.spark._jvm.org.apache.hadoop.fs.Path(self.emails_path)
+        if not path.getFileSystem(self.spark._jsc.hadoopConfiguration()).exists(path):
             return None
+        return self.spark.read.parquet(self.emails_path)
 
     # -- stages -----------------------------------------------------------
     def transform(self, raw_json: DataFrame) -> DataFrame:
@@ -55,47 +89,52 @@ class EmailETLPipeline:
         Unparseable payloads (no message_id after parsing) are dropped
         here and counted by run_import as `failed` (ref: stats
         bookkeeping, src/etl_pipeline.py:24-30)."""
-        emails = parse_gmail_json(raw_json).where(F.col("message_id").isNotNull())
-        emails = flag_suspicious_content(emails)
-        embed_input = prepare_email_text(
-            F.col("subject"), F.col("sender"), F.col("body_markdown")
-        )
-        emails = emails.withColumn("embed_text", embed_input)
-        emails = embed_documents(emails, text_col="embed_text").drop("embed_text")
-        return emails
+        cols = _stage_columns()
+        emails = flag_suspicious_content(parse_gmail_json(raw_json).where(cols["has_id"]))
+        emails = emails.withColumn("embed_text", cols["embed_text"])
+        return embed_documents(emails, text_col="embed_text").drop("embed_text")
+
+    def _write_new(self, new: DataFrame, write_markdown: bool = True) -> int:
+        """Materialize the new rows in one job (the one pass over the
+        input), then write the sinks in the order the module docstring
+        gives. Returns the number of new rows."""
+        new, new_obs = observe_counters(new, "import_new", n=_stage_columns()["rows"])
+        # a local checkpoint, not cache(): its lineage ends at the
+        # materialized rows, so no later job can reach back to the
+        # input, and an append to the emails table cannot invalidate it
+        new = new.localCheckpoint(eager=True)
+        try:
+            n_new = new_obs.get["n"]
+            if n_new:
+                if write_markdown:
+                    write_markdown_tree(new, self.markdown_path)
+                new.select(*_stage_columns()["audit"]).write.mode("append").parquet(self.audit_path)
+                new.write.mode("append").parquet(self.emails_path)
+        finally:
+            # release the checkpoint blocks now, not at the JVM's next
+            # garbage collection
+            new._jdf.queryExecution().logical().rdd().unpersist(False)
+        return n_new
 
     def run_import(self, raw_json: DataFrame, write_markdown: bool = True) -> dict:
         """Full import (ref: run_import, src/etl_pipeline.py:32-91):
-        parse → validate → skip-already-imported → persist → archive."""
-        n_raw = raw_json.count()
-        emails = self.transform(raw_json)
+        parse → validate → skip-already-imported → persist → archive.
+        The raw and parsed counts behind the stats are observed inside
+        the job that materializes the new rows."""
         existing = self._existing()
+        rows = _stage_columns()["rows"]
+        raw_json, raw_obs = observe_counters(raw_json, "import_raw", n=rows)
+        emails, parsed_obs = observe_counters(self.transform(raw_json), "import_parsed", n=rows)
+        new = emails
         if existing is not None:
-            new = emails.join(
-                existing.select("message_id"), "message_id", "left_anti"
-            )
-        else:
-            new = emails
-        new = new.cache()
-        n_new = new.count()
-        if n_new:
-            new.write.mode("append").parquet(self.emails_path)
-            if write_markdown:
-                write_markdown_tree(new, self.markdown_path)
-            audit = new.select(
-                "message_id",
-                F.lit("imported").alias("action"),
-                F.current_timestamp().alias("at"),
-            )
-            audit.write.mode("append").parquet(self.audit_path)
-        n_parsed = emails.count()
-        stats = {
+            new = emails.join(existing.select("message_id"), "message_id", "left_anti")
+        n_new = self._write_new(new, write_markdown)
+        n_raw, n_parsed = raw_obs.get["n"], parsed_obs.get["n"]
+        return {
             "processed": n_new,
             "skipped": n_parsed - n_new,
             "failed": n_raw - n_parsed,
         }
-        new.unpersist()
-        return stats
 
     def run_incremental_sync(self, raw_json: DataFrame) -> dict:
         """Only payloads newer than the stored max(date) watermark
@@ -104,20 +143,15 @@ class EmailETLPipeline:
         if existing is None:
             return self.run_import(raw_json)
         watermark = existing.agg(F.max("date").alias("max_date"))
-        emails = self.transform(raw_json)
         fresh = (
-            emails.crossJoin(F.broadcast(watermark))
+            self.transform(raw_json)
+            .crossJoin(F.broadcast(watermark))
             .where(F.col("date") > F.col("max_date"))
             .drop("max_date")
         )
         # reuse the anti-join path for exactness at the boundary
-        new = fresh.join(existing.select("message_id"), "message_id", "left_anti").cache()
-        n_new = new.count()
-        if n_new:
-            new.write.mode("append").parquet(self.emails_path)
-            write_markdown_tree(new, self.markdown_path)
-        new.unpersist()
-        return {"processed": n_new}
+        new = fresh.join(existing.select("message_id"), "message_id", "left_anti")
+        return {"processed": self._write_new(new)}
 
     def latest_emails(self) -> DataFrame:
         """Keep-latest-per-message view over the append-only store

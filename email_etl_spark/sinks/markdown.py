@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from email_etl_spark.functions import built_once
 from email_etl_spark.functions.text import slugify
 
 
@@ -25,9 +26,10 @@ def _yaml_list(col: Column) -> Column:
     return F.concat(F.lit("["), F.array_join(quoted, ", "), F.lit("]"))
 
 
-def render_markdown(df: DataFrame) -> DataFrame:
-    """Add `markdown` (full document text) and `slug` columns to a
-    canonical email DataFrame."""
+@built_once
+def _markdown_columns() -> tuple[Column, Column]:
+    """(markdown, slug) for render_markdown, built once
+    (functions.built_once)."""
     fm = F.concat(
         F.lit("---\n"),
         F.lit("id: "), F.col("message_id"), F.lit("\n"),
@@ -53,18 +55,33 @@ def render_markdown(df: DataFrame) -> DataFrame:
         F.lit("_"),
         slugify(F.coalesce(F.col("subject"), F.lit("untitled"))),
     )
-    return df.withColumn("markdown", F.concat(fm, body)).withColumn("slug", slug)
+    return F.concat(fm, body), slug
 
 
-def write_markdown_tree(df: DataFrame, out_dir: str) -> None:
-    """Write the rendered corpus as a year/month-partitioned text
-    layout (ref: _get_email_path, src/markdown_storage.py:52-65)."""
-    rendered = render_markdown(df).select(
+def render_markdown(df: DataFrame) -> DataFrame:
+    """Add `markdown` (full document text) and `slug` columns to a
+    canonical email DataFrame."""
+    markdown, slug = _markdown_columns()
+    return df.withColumn("markdown", markdown).withColumn("slug", slug)
+
+
+@built_once
+def _tree_columns() -> tuple[Column, ...]:
+    return (
         F.year("date").alias("year"),
         F.month("date").alias("month"),
         F.col("markdown").alias("value"),
     )
-    rendered.write.mode("overwrite").partitionBy("year", "month").text(out_dir)
+
+
+def write_markdown_tree(df: DataFrame, out_dir: str) -> None:
+    """Append the rendered corpus to a year/month-partitioned text
+    layout (ref: _get_email_path, src/markdown_storage.py:52-65).
+    Append, because the archive accumulates across imports like the
+    reference's per-message file saves; every write adds its own
+    uniquely named part files."""
+    rendered = render_markdown(df).select(*_tree_columns())
+    rendered.write.mode("append").partitionBy("year", "month").text(out_dir)
 
 
 def build_index(df: DataFrame) -> DataFrame:

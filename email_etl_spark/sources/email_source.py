@@ -27,6 +27,7 @@ from collections.abc import Iterator
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from email_etl_spark.functions import built_once
 from email_etl_spark.functions.email_text import (
     addr_email,
     addr_name,
@@ -43,9 +44,11 @@ def _header(headers: Column, name: str) -> Column:
     return F.when(F.size(matches) > 0, F.element_at(matches, 1)["value"]).otherwise(F.lit(None))
 
 
-def parse_gmail_json(raw: DataFrame, json_col: str = "payload") -> DataFrame:
-    """Parse a DataFrame with a JSON-string column of Gmail-API-like
-    messages into the canonical email schema."""
+@built_once
+def _gmail_columns(json_col: str) -> tuple[Column, ...]:
+    """The select list of parse_gmail_json. Its header lookups and
+    recipient splits trace Python lambdas through py4j, so it is built
+    once per json column name (functions.built_once)."""
     msg = F.from_json(F.col(json_col), RAW_GMAIL_SCHEMA)
     headers = msg["headers"]
     from_h = _header(headers, "From")
@@ -64,7 +67,7 @@ def parse_gmail_json(raw: DataFrame, json_col: str = "payload") -> DataFrame:
             F.lit(None).cast("boolean").alias("is_safe"),
         ),
     )
-    return raw.select(
+    return (
         msg["id"].alias("message_id"),
         msg["threadId"].alias("thread_id"),
         _header(headers, "Subject").alias("subject"),
@@ -83,6 +86,12 @@ def parse_gmail_json(raw: DataFrame, json_col: str = "payload") -> DataFrame:
         att_structs.alias("attachments"),
         F.create_map(F.lit("snippet"), msg["snippet"]).alias("metadata"),
     )
+
+
+def parse_gmail_json(raw: DataFrame, json_col: str = "payload") -> DataFrame:
+    """Parse a DataFrame with a JSON-string column of Gmail-API-like
+    messages into the canonical email schema."""
+    return raw.select(*_gmail_columns(json_col))
 
 
 def parse_rfc822(raw: DataFrame, text_col: str = "raw") -> DataFrame:
