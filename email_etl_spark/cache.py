@@ -1,15 +1,24 @@
-"""Directory-keyed DataFrame-handle caches with explicit invalidation.
+"""One memo for every per-corpus handle, with explicit invalidation.
 
-Serving layers memoize `spark.read.parquet(index_dir)` handles so a
-query doesn't re-list the partition tree per call (plans/dedup.py
-_IDX_CACHE, plans/search.py _LIT_CACHE). That is safe for the
-build-once test/bench lifecycle, but a LONG-LIVED service that runs
-streaming index maintenance would pin stale plans: compaction
-stage-then-swaps the base directory, so a cached handle either reads
-the pre-compact listing or errors on the deleted path. The compaction
-paths (streaming/ann_index.py, streaming/text_index.py) call
-`invalidate_under(index_root)` after the swap, which drops every
-registered cache entry whose key resolves to a path under that root.
+Query builders reuse what they derive from a corpus or an index
+directory: scan and index handles (`spark.read.parquet` lists files
+and reads footers on every call), `.cache()`d intermediate tables that
+several registry queries share, and small driver-side results such as
+trained codebooks or a row count. `memo(spark, kind, path, *params,
+build=...)` holds each of them once per `(kind, path, params)`.
+
+Entries live under the `applicationId` they were built in. The first
+call under a new application drops every older entry: a stopped
+context took its blocks with it, and a handle from it fails on first
+use. So a session restart inside a long-lived process rebuilds instead
+of failing, and the memo never holds more than one application's state.
+
+A long-lived service that maintains an index stage-then-swaps its base
+directory on compaction; a held handle would read the pre-compact
+listing or fail on the deleted path. The compaction paths
+(streaming/ann_index.py, streaming/text_index.py) therefore call
+`invalidate_under(index_root)` after the swap, which drops and
+unpersists every entry whose path lies under that root.
 """
 
 from __future__ import annotations
@@ -18,30 +27,35 @@ import os
 from collections.abc import Callable
 from typing import Any
 
-# (cache_dict, key -> path-or-None, on_drop-or-None)
-_REGISTRY: list[
-    tuple[dict, Callable[[Any], str | None], Callable[[Any], None] | None]
-] = []
+from pyspark.sql import SparkSession
+
+# applicationId -> {(kind, abspath, params): value}; at most one app
+_memo: dict[str, dict[tuple, Any]] = {}
 
 
-def register_dir_cache(
-    cache: dict,
-    key_to_path: Callable[[Any], str | None],
-    on_drop: Callable[[Any], None] | None = None,
-) -> None:
-    """Register a module-level cache whose entries are keyed (possibly
-    among other things) by a directory path. `key_to_path` maps a cache
-    key to that path, or None for non-directory entries (those are
-    never invalidated here). `on_drop`, when given, is called with each
-    dropped VALUE — caches holding `.cache()`d DataFrames pass an
-    unpersist callback here, because dropping the dict entry alone
-    would leave the stale blocks pinned in executor storage."""
-    _REGISTRY.append((cache, key_to_path, on_drop))
+def memo(
+    spark: SparkSession, kind: str, path: str | None, *params, build: Callable[[], Any]
+) -> Any:
+    """`build()`, memoized under `(kind, abspath(path), params)` for
+    the session's application. `path=None` (an ad-hoc frame with no
+    corpus directory behind it) builds on every call and memoizes
+    nothing."""
+    if path is None:
+        return build()
+    app = spark.sparkContext.applicationId
+    entries = _memo.get(app)
+    if entries is None:
+        _memo.clear()  # older applications are stopped: nothing to unpersist
+        entries = _memo[app] = {}
+    key = (kind, os.path.abspath(path), params)
+    if key not in entries:
+        entries[key] = build()
+    return entries[key]
 
 
 def unpersist_value(value: Any) -> None:
-    """Default on_drop for caches of persisted DataFrames (or tuples
-    of them): best-effort unpersist of everything that supports it."""
+    """Best-effort unpersist of a dropped value, or of each item of a
+    tuple/list value: everything that supports it."""
     items = value if isinstance(value, (tuple, list)) else (value,)
     for item in items:
         unpersist = getattr(item, "unpersist", None)
@@ -52,25 +66,13 @@ def unpersist_value(value: Any) -> None:
                 pass  # session already stopped; nothing to release
 
 
-def _under(path: str, root: str) -> bool:
-    path = os.path.abspath(path)
-    root = os.path.abspath(root)
-    return path == root or path.startswith(root + os.sep)
-
-
 def invalidate_under(root: str) -> int:
-    """Drop every registered cache entry whose key path lies under
+    """Drop, and unpersist, every memo entry whose path lies under
     `root` (inclusive). Returns the number of dropped entries."""
+    root = os.path.abspath(root)
     dropped = 0
-    for cache, key_to_path, on_drop in _REGISTRY:
-        stale = []
-        for key in cache:
-            p = key_to_path(key)
-            if p is not None and _under(p, root):
-                stale.append(key)
-        for key in stale:
-            value = cache.pop(key)
-            if on_drop is not None:
-                on_drop(value)
+    for entries in _memo.values():
+        for key in [k for k in entries if k[1] == root or k[1].startswith(root + os.sep)]:
+            unpersist_value(entries.pop(key))
             dropped += 1
     return dropped

@@ -13,6 +13,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from email_etl_spark.cache import memo
+
 TABLES = (
     "region",
     "nation",
@@ -38,24 +40,19 @@ def _ensure_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
-# scan memoization: spark.read.parquet costs ~100 ms of driver-side
-# footer/schema I/O per call, paid again by EVERY query build on the
-# same immutable table. Key by applicationId (unique per session, no
-# id() reuse hazard) + resolved path; values are lazy analyzed plans,
-# so the cache holds no data.
-_SCAN_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one corpus table. Parquet → column pruning + predicate
     pushdown come for free from the DataFrame plan."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     _ensure_confs(spark)
-    key = (spark.sparkContext.applicationId, os.path.abspath(os.path.join(sf_dir, name)))
-    cached = _SCAN_CACHE.get(key)
-    if cached is not None:
-        return cached
+    # memoized: spark.read.parquet costs ~100 ms of driver-side
+    # footer/schema I/O per call, paid again by EVERY query build on
+    # the same immutable table; the value is a lazy plan, no data
+    return memo(spark, "scan", sf_dir, name, build=lambda: _read_table(spark, sf_dir, name))
+
+
+def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     # TIMESTAMP(NANOS) columns arrive as long (see session.py); convert
     # to microsecond timestamps (the corpus has no sub-µs components).
@@ -64,8 +61,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # integer division: ns epochs exceed 2^53, so going through
             # a double division would lose microseconds
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    _SCAN_CACHE[key] = df
     return df
+
+
+def open_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """`spark.read.parquet(path)` for a persisted index table, held
+    open: listing an index's partition tree costs up to ~1 s of
+    driver-side discovery per fresh read, so a serving layer reads it
+    once. Compaction drops the handle (cache.invalidate_under)."""
+    return memo(spark, "parquet", path, build=lambda: spark.read.parquet(path))
 
 
 # Primary-key column sets for the corpus tables, in lookup order.

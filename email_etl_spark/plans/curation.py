@@ -26,22 +26,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from email_etl_spark.cache import memo
 from email_etl_spark.functions import hashing as H
 from email_etl_spark.functions import text as T
-from email_etl_spark.io import load_table
+from email_etl_spark.io import load_table, parallelize_scan
 from email_etl_spark.plans.registry import register
 
 _TOKS = "list_filter(str_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '')"
-
-# fuzzy_decontaminate's cached (doc_id, sh, is_bench) table, memoized
-# per corpus dir so repeated calls in one long-lived session reuse one
-# pinned handle instead of accumulating them (ADVICE r6; same
-# discipline as plans/dedup.py _SH_CACHE). Invalidation unpersists.
-from email_etl_spark.cache import register_dir_cache as _reg_cache
-from email_etl_spark.cache import unpersist_value as _unpersist_value
-
-_DECON_SH_CACHE: dict = {}  # sf_dir -> cached shingle+flag DataFrame
-_reg_cache(_DECON_SH_CACHE, lambda key: key, on_drop=_unpersist_value)
 
 # hex-prefix thresholds: uniform md5 → first 2 hex chars < 'e6' keeps
 # 230/256 ≈ 89.8%, < 'f3' keeps 243/256 ≈ 94.9%.
@@ -270,6 +261,31 @@ _FUZZY_DECON_THRESHOLD = 0.6  # 3-gram Jaccard
 _FUZZY_DECON_THR_BPS = 6000   # the same cut on the exact integer j_bps contract
 
 
+def _bench_flagged_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """fuzzy_decontaminate's cached (doc_id, sh, is_bench) table,
+    memoized per corpus dir: repeated calls in one long-lived session
+    reuse one pinned handle instead of accumulating them (ADVICE r6)."""
+
+    def build():
+        docs = load_table(spark, sf_dir, "documents")
+        toks = parallelize_scan(docs).select(
+            "doc_id", T.tokens(F.col("text")).alias("toks")
+        )
+        is_bench = (
+            F.substring(
+                F.md5(F.concat(F.lit("bench:"), F.col("doc_id").cast("string"))), 1, 1
+            )
+            == "0"
+        )
+        return toks.select(
+            "doc_id",
+            H.shingles(F.col("toks"), k=3).alias("sh"),
+            is_bench.alias("is_bench"),
+        ).cache()
+
+    return memo(spark, "decon_sh", sf_dir, build=build)
+
+
 @register(
     "fuzzy_decontaminate",
     headline=True,
@@ -313,28 +329,7 @@ ORDER BY train_id, bench_id
     ),
 )
 def fuzzy_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from email_etl_spark.io import parallelize_scan
-
-    sh = _DECON_SH_CACHE.get(sf_dir)
-    if sh is not None and sh.sparkSession is not spark:
-        sh = None  # handle from a stopped/replaced session: rebuild
-    if sh is None:
-        docs = load_table(spark, sf_dir, "documents")
-        toks = parallelize_scan(docs).select(
-            "doc_id", T.tokens(F.col("text")).alias("toks")
-        )
-        is_bench = (
-            F.substring(
-                F.md5(F.concat(F.lit("bench:"), F.col("doc_id").cast("string"))), 1, 1
-            )
-            == "0"
-        )
-        sh = toks.select(
-            "doc_id",
-            H.shingles(F.col("toks"), k=3).alias("sh"),
-            is_bench.alias("is_bench"),
-        ).cache()
-        _DECON_SH_CACHE[sf_dir] = sh
+    sh = _bench_flagged_shingles(spark, sf_dir)
 
     # candidate-only lanes (r10): the lanes never reach the output —
     # only bucket-colliding pairs survive to exact verification — so
@@ -952,8 +947,6 @@ FROM t
     ),
 )
 def dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from email_etl_spark.io import parallelize_scan
-
     docs = parallelize_scan(load_table(spark, sf_dir, "documents"))
     qm = (T.quality_score(F.col("text")).cast("decimal(18,4)") * 10000).cast("bigint")
     t = docs.select(
@@ -1083,8 +1076,6 @@ FROM c GROUP BY lang ORDER BY lang
 )
 def weighted_length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
-
-    from email_etl_spark.io import parallelize_scan
 
     docs = parallelize_scan(load_table(spark, sf_dir, "documents"))
     t = docs.select("doc_id", "lang", T.token_count(F.col("text")).cast("bigint").alias("n_tok"))

@@ -21,29 +21,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from email_etl_spark.cache import memo
 from email_etl_spark.functions import hashing as H
 from email_etl_spark.functions import text as T
 from email_etl_spark.functions.vectors import cosine_rounded, duckdb_cosine
-from email_etl_spark.io import load_table, parallelize_scan
+from email_etl_spark.io import load_table, open_parquet, parallelize_scan
 from email_etl_spark.plans.registry import register
 
 MINHASH_THRESHOLD = 0.6   # 3-gram Jaccard
 NGRAM_THRESHOLD = 0.5     # 2-gram Jaccard
 EMB_THRESHOLD = 0.45      # cosine
-
-# Per-corpus memoized `.cache()` handles (ADVICE r6: a serving process
-# that runs the dedup family repeatedly must not accumulate pinned
-# storage per CALL — these bound it per corpus instead, and corpus-dir
-# invalidation both drops the entry and unpersists the blocks).
-from email_etl_spark.cache import register_dir_cache as _reg_cache
-from email_etl_spark.cache import unpersist_value as _unpersist_value
-
-_SH_CACHE: dict = {}       # (sf_dir, k) -> cached shingle DataFrame
-_CLOSURE_CACHE: dict = {}  # (sf_dir, k, threshold) -> (edges, reps_sh)
-_CC_CACHE: dict = {}       # (sf_dir, k, threshold) -> component labels
-_reg_cache(_SH_CACHE, lambda key: key[0], on_drop=_unpersist_value)
-_reg_cache(_CLOSURE_CACHE, lambda key: key[0], on_drop=_unpersist_value)
-_reg_cache(_CC_CACHE, lambda key: key[0], on_drop=_unpersist_value)
 
 
 def _closure_components(spark, sf_dir: str, k: int, threshold: float):
@@ -55,17 +42,13 @@ def _closure_components(spark, sf_dir: str, k: int, threshold: float):
     shuffles and pin fresh checkpoint blocks per call."""
     from email_etl_spark.operators.graph import connected_components
 
-    key = (sf_dir, k, threshold)
-    comp = _CC_CACHE.get(key)
-    if comp is not None and comp.sparkSession is not spark:
-        comp = None  # handle from a stopped/replaced session: rebuild
-    if comp is None:
+    def build():
         edges = _closure_edges(
             load_table(spark, sf_dir, "documents"), k=k, threshold=threshold, sf_dir=sf_dir
         )
-        comp = connected_components(edges, src="doc_a", dst="doc_b")
-        _CC_CACHE[key] = comp
-    return comp
+        return connected_components(edges, src="doc_a", dst="doc_b")
+
+    return memo(spark, "cc", sf_dir, k, threshold, build=build)
 
 _TOKS = "list_filter(str_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '')"
 
@@ -149,21 +132,14 @@ def _shingle_table(docs: DataFrame, k: int, sf_dir: str | None = None) -> DataFr
     Ad-hoc DataFrames (tests, composed operators) omit sf_dir and keep
     the per-call handle, relying on Spark's LRU block eviction.
     """
-    key = (sf_dir, k)
-    cached = _SH_CACHE.get(key) if sf_dir is not None else None
-    if cached is not None and cached.sparkSession is docs.sparkSession:
-        return cached  # stale-session handles are rebuilt, not returned
-    toks = parallelize_scan(docs).select(
-        "doc_id", T.tokens(F.col("text")).alias("toks")
-    )
-    sh = toks.select("doc_id", H.shingles(F.col("toks"), k=k).alias("sh")).cache()
-    if sf_dir is not None:
-        _SH_CACHE[key] = sh
-    return sh
 
+    def build():
+        toks = parallelize_scan(docs).select(
+            "doc_id", T.tokens(F.col("text")).alias("toks")
+        )
+        return toks.select("doc_id", H.shingles(F.col("toks"), k=k).alias("sh")).cache()
 
-_MD5_SIG_CACHE: dict = {}  # (sf_dir, k) -> cached md5 signature table
-_reg_cache(_MD5_SIG_CACHE, lambda key: key[0], on_drop=_unpersist_value)
+    return memo(docs.sparkSession, "shingles", sf_dir, k, build=build)
 
 
 def _md5_sig_table(docs: DataFrame, sf_dir: str | None, k: int = 3) -> DataFrame:
@@ -171,17 +147,15 @@ def _md5_sig_table(docs: DataFrame, sf_dir: str | None, k: int = 3) -> DataFrame
     corpus dir (r10): the 8-md5-per-shingle signature projection is
     the most expensive pass in the md5-lane family, and FIVE registry
     queries each re-ran it per call — the calibration/est_error pair
-    joins twice (both sides). Derived from the cached _shingle_table,
-    same lifecycle/eviction (register_dir_cache + unpersist)."""
-    key = (sf_dir, k)
-    cached = _MD5_SIG_CACHE.get(key) if sf_dir is not None else None
-    if cached is not None and cached.sparkSession is docs.sparkSession:
-        return cached
-    sig = H.with_minhash_sig(_shingle_table(docs, k, sf_dir=sf_dir), "sh").drop("sh")
-    if sf_dir is not None:
-        sig = sig.cache()
-        _MD5_SIG_CACHE[key] = sig
-    return sig
+    joins twice (both sides). Derived from the cached _shingle_table;
+    only the memoized table is pinned."""
+
+    def sig():
+        return H.with_minhash_sig(_shingle_table(docs, k, sf_dir=sf_dir), "sh").drop("sh")
+
+    if sf_dir is None:
+        return sig()
+    return memo(docs.sparkSession, "md5_sig", sf_dir, k, build=lambda: sig().cache())
 
 
 def _lsh_verified_pairs(
@@ -383,10 +357,14 @@ def _closure_edges(
     dup_cluster_size_hist / dedup_savings re-derive clusters and would
     otherwise re-pin a fresh reps_sh handle per call (ADVICE r6).
     """
-    memo_key = (sf_dir, k, threshold)
-    cached = _CLOSURE_CACHE.get(memo_key) if sf_dir is not None else None
-    if cached is not None and cached[0].sparkSession is docs.sparkSession:
-        return cached[0]  # stale-session handles are rebuilt, not returned
+    return memo(
+        docs.sparkSession, "closure", sf_dir, k, threshold,
+        build=lambda: _closure_edges_build(docs, k, threshold, sf_dir),
+    )[0]
+
+
+def _closure_edges_build(docs: DataFrame, k: int, threshold: float, sf_dir: str | None):
+    """(edges, reps_sh): the edge stream and the cached table it reads."""
     sh = _shingle_table(docs, k, sf_dir=sf_dir)
     fp = sh.select(
         "doc_id",
@@ -410,10 +388,7 @@ def _closure_edges(
     rep_pairs = _verified_pairs_from_shingles(
         reps_sh, threshold, ordered=False
     ).select("doc_a", "doc_b")
-    edges = star.unionByName(rep_pairs)
-    if sf_dir is not None:
-        _CLOSURE_CACHE[memo_key] = (edges, reps_sh)
-    return edges
+    return star.unionByName(rep_pairs), reps_sh
 
 
 @register(
@@ -445,13 +420,6 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # anchored at the repo root (not the caller's cwd) — see ANN_INDEX_ROOT
 import os as _os
-
-from email_etl_spark.cache import register_dir_cache as _register_dir_cache
-
-_IDX_CACHE: dict = {}
-# keys are index_dir strings; compaction paths invalidate via
-# email_etl_spark.cache.invalidate_under(index_root)
-_register_dir_cache(_IDX_CACHE, lambda k: k if isinstance(k, str) else None)
 
 MINHASH_INDEX_ROOT = _os.path.join(
     _os.path.dirname(_os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))),
@@ -514,12 +482,7 @@ def build_minhash_index(
 )
 def dedup_minhash_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     index_dir = build_minhash_index(spark, sf_dir)
-    # memoized relation: a serving layer holds the table handle open
-    # rather than re-listing the partition tree per query
-    idx = _IDX_CACHE.get(index_dir)
-    if idx is None:
-        idx = spark.read.parquet(index_dir)
-        _IDX_CACHE[index_dir] = idx
+    idx = open_parquet(spark, index_dir)
     l, r = idx.alias("l"), idx.alias("r")
     cand = (
         l.join(
@@ -1483,26 +1446,21 @@ def _semdedup_k(n: int) -> int:
     return max(KM_K, math.isqrt(n))
 
 
-# per-corpus memoized, .cache()d coarse assignment (vec_id, embedding,
-# cid): the within-cluster pair stage self-joins the assignment, and
-# without a barrier BOTH sides re-run the Arrow assign kernel and the
-# corpus scan (measured ~2x wall at sf0.1). Materializing the
-# assignment is the published SemDeDup shape (cluster once, then prune
-# per cluster); MEMORY_AND_DISK spills rather than OOMs at corpus
-# scale, and the dir-cache registration unpersists on invalidation
-# (the _SH_CACHE convention).
-_SEMDEDUP_CACHE: dict = {}
-_reg_cache(_SEMDEDUP_CACHE, lambda key: key[0], on_drop=_unpersist_value)
-
-
 def _semdedup_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from email_etl_spark.plans.search import _km_assign
+    # memoized, .cache()d coarse assignment (vec_id, embedding, cid):
+    # the within-cluster pair stage self-joins the assignment, and
+    # without a barrier BOTH sides re-run the Arrow assign kernel and
+    # the corpus scan (measured ~2x wall at sf0.1). Materializing the
+    # assignment is the published SemDeDup shape (cluster once, then
+    # prune per cluster).
+    return memo(spark, "semdedup", sf_dir, build=lambda: _semdedup_assign(spark, sf_dir))
 
-    key = (sf_dir,)
-    if key in _SEMDEDUP_CACHE:
-        return _SEMDEDUP_CACHE[key]
+
+def _semdedup_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from email_etl_spark.plans.search import _km_assign, _n_vectors
+
     emb = parallelize_scan(load_table(spark, sf_dir, "embeddings"))
-    k = _semdedup_k(emb.count())
+    k = _semdedup_k(_n_vectors(spark, sf_dir))
     init = (
         emb.where(F.col("vec_id") < k)
         .select("vec_id", "embedding")
@@ -1510,9 +1468,7 @@ def _semdedup_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     )
     cents = [(int(r["vec_id"]), [float(x) for x in r["embedding"]]) for r in init]
-    a = _km_assign(emb, cents).select("vec_id", "embedding", "cid").cache()
-    _SEMDEDUP_CACHE[key] = a
-    return a
+    return _km_assign(emb, cents).select("vec_id", "embedding", "cid").cache()
 
 
 def _semdedup_k_sql() -> str:
@@ -3238,10 +3194,7 @@ FROM tok
 )
 def minhash_index_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     index_dir = build_minhash_index(spark, sf_dir)
-    idx = _IDX_CACHE.get(index_dir)
-    if idx is None:
-        idx = spark.read.parquet(index_dir)
-        _IDX_CACHE[index_dir] = idx
+    idx = open_parquet(spark, index_dir)
     docs = load_table(spark, sf_dir, "documents")
     key = F.col("doc_id").cast("string")
     sample = docs.where(

@@ -20,6 +20,7 @@ import os as _os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from email_etl_spark.cache import memo
 from email_etl_spark.io import load_table
 from email_etl_spark.plans.registry import register
 
@@ -1253,13 +1254,6 @@ MV_BASE_ROOT = _os.path.join(
     "mv_base",
 )
 
-# snap_dir -> (snapshot DataFrame handle, midpoint) — dropped when a
-# rebuild swaps the snapshot dir (cache.invalidate_under convention)
-from email_etl_spark.cache import register_dir_cache as _register_dir_cache  # noqa: E402
-
-_MV_SNAP_CACHE: dict = {}
-_register_dir_cache(_MV_SNAP_CACHE, lambda k: k if isinstance(k, str) else None)
-
 
 def build_mv_base_snapshot(
     spark: SparkSession, sf_dir: str, snapshot_dir: str | None = None
@@ -1338,22 +1332,17 @@ def mv_refresh_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dimension-sized snapshot and re-running the one-row `.first()`
     # job on EVERY builder call cost ~0.1 s/run; the midpoint is
     # immutable snapshot metadata, so a refresh service reads it once
-    # per snapshot build. Entries drop with the snapshot dir via the
-    # cache registry (invalidate_under), like every index handle.
-    cached = _MV_SNAP_CACHE.get(snap_dir)
-    if cached is not None and cached[0].sparkSession is not spark:
-        cached = None  # stale-session handle: rebuild
-    if cached is None:
+    # per snapshot build (a rebuild invalidates the snapshot dir).
+    def read_snapshot():
         snap = spark.read.parquet(snap_dir)
         # the midpoint is snapshot metadata — one bounded value, a plan
         # constant (the MLlib shape), NOT a runtime subquery: inlining
         # it as a literal is what lets the delta predicate reach
         # PushedFilters
         row = snap.select("m").first()
-        m = row["m"] if row is not None else None
-        cached = (snap, m)
-        _MV_SNAP_CACHE[snap_dir] = cached
-    snap, m = cached
+        return snap, (row["m"] if row is not None else None)
+
+    snap, m = memo(spark, "mv_snap", snap_dir, build=read_snapshot)
 
     docs = load_table(spark, sf_dir, "documents")
     delta_docs = docs if m is None else docs.where(F.col("doc_id") > F.lit(m))

@@ -16,9 +16,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from email_etl_spark.cache import memo
+from email_etl_spark.functions import built_once
 from email_etl_spark.functions.text import tokens
 from email_etl_spark.functions.vectors import cosine_rounded, duckdb_cosine, sign_bits_fast
-from email_etl_spark.io import load_table, parallelize_scan
+from email_etl_spark.io import load_table, open_parquet, parallelize_scan
 from email_etl_spark.plans.registry import register
 
 # Fixed "user query" for deterministic testing: terms + a corpus vector
@@ -217,42 +219,23 @@ LSH_BITS = 8
 EMB_DIM = 64
 _PLANES = hyperplanes(LSH_TABLES, LSH_BITS, EMB_DIM)
 
-# plan-constant literal columns are built once per process: element-wise
-# F.lit() on a 32x64 nested array costs ~1s of py4j round-trips per
-# build, while one parsed SQL literal is ~free and value-identical
-# (repr() round-trips every IEEE double exactly).
-_LIT_CACHE: dict = {}
-
-# ("lsh_sigs"/"bm25f_tf", sf_dir) -> lazy projection DataFrame (vec_id, sig0..sig3)
-# for ann_lsh — a plan handle, never materialized data; entries from a
-# stopped session are rebuilt on first use (sparkSession check at the
-# call site).
-_SIG_DF_CACHE: dict = {}
-
-# directory-keyed entries — ("ann_idx", dir), ("pq_idx", dir),
-# ("pq_books", dir), ("qvec", sf_dir), ... — are dropped by
-# email_etl_spark.cache.invalidate_under when an index compaction
-# swaps the directory underneath them; pure plan constants ("planes")
-# map to None and are never invalidated.
-from email_etl_spark.cache import register_dir_cache as _register_dir_cache
-
-_register_dir_cache(
-    _LIT_CACHE,
-    lambda k: (
-        k[1] if isinstance(k, tuple) and len(k) == 2 and isinstance(k[1], str) else None
-    ),
-)
+# the 32 hyperplanes flattened table-major: the signature kernels'
+# input, a pure function of the md5-derived planes
+_FLAT_PLANES = [
+    [float(v) for v in _PLANES[t][j]] for t in range(LSH_TABLES) for j in range(LSH_BITS)
+]
 
 
-def _planes_literal(flat_planes):
-    col = _LIT_CACHE.get("planes")
-    if col is None:
-        sql = "array(" + ",".join(
-            "array(" + ",".join(f"{v!r}D" for v in p) + ")" for p in flat_planes
-        ) + ")"
-        col = F.expr(sql)
-        _LIT_CACHE["planes"] = col
-    return col
+@built_once
+def _planes_literal():
+    # element-wise F.lit() on a 32x64 nested array costs ~1s of py4j
+    # round-trips per build, while one parsed SQL literal is ~free and
+    # value-identical (repr() round-trips every IEEE double exactly)
+    return F.expr(
+        "array("
+        + ",".join("array(" + ",".join(f"{v!r}D" for v in p) + ")" for p in _FLAT_PLANES)
+        + ")"
+    )
 
 
 def _sig_spark(emb_col) -> list:
@@ -267,19 +250,14 @@ def _sig_spark(emb_col) -> list:
       (sign_bits_fast), which wins once tasks carry ~10^5+ vectors.
     The four substrings below reference one expression either way, so
     the signature work runs once per row."""
-    import os
-
-    flat_planes = [
-        [float(v) for v in _PLANES[t][j]] for t in range(LSH_TABLES) for j in range(LSH_BITS)
-    ]
     if os.environ.get("SPARK_GRAFT_VECTOR_KERNEL") == "pandas":
-        bits = sign_bits_fast(emb_col, flat_planes)
+        bits = sign_bits_fast(emb_col, _FLAT_PLANES)
         return [
             F.substring(bits, 1 + t * LSH_BITS, LSH_BITS).alias(f"sig{t}")
             for t in range(LSH_TABLES)
         ]
     bit_arr = F.transform(
-        _planes_literal(flat_planes),
+        _planes_literal(),
         lambda plane: F.when(
             F.aggregate(
                 F.zip_with(emb_col, plane, lambda x, y: x.cast("double") * y),
@@ -346,12 +324,10 @@ def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # when rebuilt inline (measured r10, decompose probe). A serving
     # layer derives its signature view once per corpus, exactly like
     # the persisted-index handle ann_lsh_indexed already memoizes.
-    sigs = _SIG_DF_CACHE.get(("lsh_sigs", sf_dir))
-    if sigs is not None and sigs.sparkSession is not spark:
-        sigs = None  # stale-session handle: rebuild
-    if sigs is None:
-        sigs = emb.select("vec_id", *_sig_spark(F.col("embedding")))
-        _SIG_DF_CACHE[("lsh_sigs", sf_dir)] = sigs
+    sigs = memo(
+        spark, "lsh_sigs", sf_dir,
+        build=lambda: emb.select("vec_id", *_sig_spark(F.col("embedding"))),
+    )
     # candidate discovery (r10): the query's LSH_TABLES bucket keys are
     # PLAN CONSTANTS — computed driver-side from the memoized query
     # vector with the same left-to-right IEEE accumulation as the
@@ -382,23 +358,13 @@ def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # becomes a literal array, so verification is a pure map over the
     # candidate rows — no join, no nested loop. Memoized per corpus dir
     # the way a serving layer holds the already-embedded query.
-    qvec = _LIT_CACHE.get(("qvec", sf_dir))
-    if qvec is None:
-        row = (
-            load_table(spark, sf_dir, "embeddings")
-            .where(F.col("vec_id") == QUERY_VEC_ID)
-            .select("embedding")
-            .first()
-        )
-        qvec = F.expr("array(" + ",".join(f"{float(x)!r}D" for x in row[0]) + ")")
-        _LIT_CACHE[("qvec", sf_dir)] = qvec
     return (
         F.broadcast(cand_ids)
         .join(emb, "vec_id")
         .select(
             "vec_id",
             "label",
-            cosine_rounded(F.col("embedding"), qvec).alias("similarity"),
+            cosine_rounded(F.col("embedding"), _qvec_lit(spark, sf_dir)).alias("similarity"),
         )
         .orderBy(F.desc("similarity"), "vec_id")
         .limit(5)
@@ -424,18 +390,25 @@ ANN_INDEX_ROOT = os.path.join(_REPO_ROOT, "spark-warehouse", "ann_lsh_index")
 
 def _qvec_list(spark: SparkSession, sf_dir: str) -> list[float]:
     """The already-embedded query vector as plan-constant floats
-    (memoized per corpus dir, shared with ann_multiprobe)."""
-    qvec = _LIT_CACHE.get(("qvec_list", sf_dir))
-    if qvec is None:
+    (memoized per corpus dir: its lookup is a job)."""
+
+    def build():
         row = (
             load_table(spark, sf_dir, "embeddings")
             .where(F.col("vec_id") == QUERY_VEC_ID)
             .select("embedding")
             .first()
         )
-        qvec = [float(x) for x in row[0]]
-        _LIT_CACHE[("qvec_list", sf_dir)] = qvec
-    return qvec
+        return [float(x) for x in row[0]]
+
+    return memo(spark, "qvec_list", sf_dir, build=build)
+
+
+def _qvec_lit(spark: SparkSession, sf_dir: str):
+    """The query vector as ONE parsed array literal (the
+    _planes_literal convention: element-wise F.lit() costs a py4j
+    round-trip per dimension)."""
+    return F.expr("array(" + ",".join(f"{x!r}D" for x in _qvec_list(spark, sf_dir)) + ")")
 
 
 def _query_bucket_keys(qvec: list[float]) -> list[tuple[int, str]]:
@@ -503,13 +476,9 @@ def ann_lsh_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     index_dir = build_ann_index(spark, sf_dir)
     qvec = _qvec_list(spark, sf_dir)
     keys = _query_bucket_keys(qvec)
-    # memoize the index relation: listing the ~1k bucket dirs costs
-    # ~1 s of driver-side discovery per fresh read.parquet — a serving
-    # layer holds the table handle open, it does not re-list per query
-    idx = _LIT_CACHE.get(("ann_idx", index_dir))
-    if idx is None:
-        idx = spark.read.parquet(index_dir)
-        _LIT_CACHE[("ann_idx", index_dir)] = idx
+    # listing the ~1k bucket dirs costs ~1 s of driver-side discovery
+    # per fresh read.parquet, so the handle is held open
+    idx = open_parquet(spark, index_dir)
     pred = None
     for t, key in keys:
         clause = (F.col("t") == t) & (F.col("key") == key)
@@ -685,6 +654,11 @@ def _rag_qvec() -> list[float]:
     return _embed_one(RAG_QUESTION)
 
 
+@built_once
+def _rag_qvec_literal():
+    return F.expr("array(" + ",".join(f"{float(v)!r}D" for v in _rag_qvec()) + ")")
+
+
 def _rag_oracle() -> str:
     qvec = "[" + ", ".join(repr(v) for v in _rag_qvec()) + "]::DOUBLE[]"
     cos = duckdb_cosine("e.embedding", f"({qvec})")
@@ -719,10 +693,7 @@ def rag_context(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plan-constant question vector as ONE parsed literal (the
     # _planes_literal convention): element-wise F.lit() on a 64-dim
     # array costs 64 py4j round-trips per builder call
-    qvec = _LIT_CACHE.get("rag_qvec")
-    if qvec is None:
-        qvec = F.expr("array(" + ",".join(f"{float(v)!r}D" for v in _rag_qvec()) + ")")
-        _LIT_CACHE["rag_qvec"] = qvec
+    qvec = _rag_qvec_literal()
     hits = (
         docs.join(emb, docs.doc_id == emb.vec_id)
         .select(
@@ -1020,41 +991,40 @@ def knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _knn_pairs(spark, sf_dir).orderBy("vec_id", "rank")
 
 
-# exact-kNN pair table, memoized per corpus dir: FOUR registry queries
-# (knn_join, hub_vectors, label_noise_knn, knn_confusion) consume the
-# same O(n²)-tiled pair computation, and each lazy consumer re-ran the
-# whole pipeline (~12 s each at sf0.1, r10 measurement). One pinned
-# handle per corpus — the _closure_components / _semdedup_assignment
-# convention, unpersist-on-eviction via register_dir_cache.
-_KNN_CACHE: dict = {}
-
-from email_etl_spark.cache import unpersist_value as _unpersist_value  # noqa: E402
-
-_register_dir_cache(_KNN_CACHE, lambda k: k, on_drop=_unpersist_value)
-
-
 _KNN_BLOCK = 4096  # tile side in rows: one tile's similarity matrix
 # is at most 4096² float64 = 128 MB — a bounded per-task allocation at
 # any corpus size (guide §5)
 
 
-def _knn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    slack = 8  # local-rank cushion >> any matmul-vs-fold fp divergence
+def _n_vectors(spark: SparkSession, sf_dir: str) -> int:
+    """Row count of the embeddings table, memoized per corpus: three
+    builders (_knn_pairs, reciprocal_best_match, _semdedup_assignment)
+    derive their tile or cluster count from it, and each count is a
+    job."""
+    return memo(spark, "rows", sf_dir, build=lambda: load_table(spark, sf_dir, "embeddings").count())
 
-    cached = _KNN_CACHE.get(sf_dir)
-    if cached is not None and cached.sparkSession is spark:
-        return cached
+
+def _knn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # memoized: FOUR registry queries (knn_join, hub_vectors,
+    # label_noise_knn, knn_confusion) consume the same O(n²)-tiled pair
+    # computation, and each lazy consumer re-ran the whole pipeline
+    # (~12 s each at sf0.1, r10 measurement)
+    return memo(spark, "knn", sf_dir, build=lambda: _knn_pairs_build(spark, sf_dir))
+
+
+def _knn_pairs_build(spark: SparkSession, sf_dir: str) -> DataFrame:
+    slack = 8  # local-rank cushion >> any matmul-vs-fold fp divergence
 
     emb = load_table(spark, sf_dir, "embeddings")
     # r11: P DERIVED from the corpus (the doc always promised "P grows
     # with the corpus"; the r10 code pinned P=8, which is 36 tiny tiles
     # + 9x row duplication at test scale and an OOM at 100 TB where a
     # block would hold n/8 rows). ceil(n/4096) keeps every tile's
-    # matmul bounded; the count is one metadata-cheap job memoized with
-    # the result handle. Candidate superset proof is P-independent:
-    # each unordered pair lands in exactly one tile, and a global
-    # top-k member is necessarily a local top-k member of its tile.
-    P = max(1, -(-emb.count() // _KNN_BLOCK))
+    # matmul bounded; the count is one memoized job (_n_vectors).
+    # Candidate superset proof is P-independent: each unordered pair
+    # lands in exactly one tile, and a global top-k member is
+    # necessarily a local top-k member of its tile.
+    P = max(1, -(-_n_vectors(spark, sf_dir) // _KNN_BLOCK))
     blk = F.pmod(F.col("vec_id"), F.lit(P)).cast("int")
     base = emb.select("vec_id", "embedding", blk.alias("blk"))
     left = base.select(
@@ -1157,7 +1127,7 @@ def _knn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reuse the q exchange when the joins shuffle (§2.4). Order is the
     # window's exactly: struct sorts (c DESC, -n DESC) = (c DESC, n
     # ASC); per-q lists are bounded by P·(k+slack) candidates.
-    ranked = (
+    return (
         scored.groupBy("q")
         .agg(
             F.slice(
@@ -1184,8 +1154,6 @@ def _knn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cache()
     )
-    _KNN_CACHE[sf_dir] = ranked
-    return ranked
 
 
 def _recall_oracle() -> str:
@@ -1983,16 +1951,7 @@ def ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # query signatures recomputed driver-side: same planes, same
     # sequential fold order (0.0 + x0*y0 + ...) -> bit-identical bits
-    qvec = _LIT_CACHE.get(("qvec_list", sf_dir))
-    if qvec is None:
-        row = (
-            load_table(spark, sf_dir, "embeddings")
-            .where(F.col("vec_id") == QUERY_VEC_ID)
-            .select("embedding")
-            .first()
-        )
-        qvec = [float(x) for x in row[0]]
-        _LIT_CACHE[("qvec_list", sf_dir)] = qvec
+    qvec = _qvec_list(spark, sf_dir)
     probes = []
     for t in range(LSH_TABLES):
         acc_bits = []
@@ -2506,10 +2465,10 @@ def _pq_train_books(emb: DataFrame, sf_dir: str | None = None) -> dict:
     memoized query vector — and FOUR registry queries (ann_pq,
     ann_ivfpq, pq_recall_eval, build_pq_index) each re-ran the two
     training jobs (seed collect + Lloyd-update aggregate) per call."""
-    if sf_dir is not None:
-        cached = _LIT_CACHE.get(("pq_books_trained", sf_dir))
-        if cached is not None:
-            return cached
+    return memo(emb.sparkSession, "pq_trained", sf_dir, build=lambda: _pq_train_books_build(emb))
+
+
+def _pq_train_books_build(emb: DataFrame) -> dict:
     v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     seeds = (
         emb.where(F.col("vec_id") < PQ_K)
@@ -2561,7 +2520,7 @@ def _pq_train_books(emb: DataFrame, sf_dir: str | None = None) -> dict:
         by_mc.setdefault((int(r["m"]), int(r["cid"])), {})[int(r["dim"])] = (
             int(r["microv"]) / 1000000.0
         )
-    books = {
+    return {
         m: sorted(
             [
                 (cid, [dims[p] for p in sorted(dims)])
@@ -2571,9 +2530,6 @@ def _pq_train_books(emb: DataFrame, sf_dir: str | None = None) -> dict:
         )
         for m in range(PQ_M)
     }
-    if sf_dir is not None:
-        _LIT_CACHE[("pq_books_trained", sf_dir)] = books
-    return books
 
 
 def _pq_encode(emb: DataFrame, books: dict) -> DataFrame:
@@ -3022,14 +2978,13 @@ def ann_ivfpq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
 
     # codebook: 64 tiny rows, memoized plan constants
-    books1 = _LIT_CACHE.get(("pq_books", index_dir))
-    if books1 is None:
-        brows = spark.read.parquet(_os.path.join(index_dir, "codebook")).collect()
-        books1 = {m: [] for m in range(PQ_M)}
-        for r in brows:
-            books1[int(r["m"])].append((int(r["cid"]), [float(x) for x in r["cv"]]))
-        books1 = {m: sorted(v) for m, v in books1.items()}
-        _LIT_CACHE[("pq_books", index_dir)] = books1
+    def read_books():
+        books = {m: [] for m in range(PQ_M)}
+        for r in spark.read.parquet(_os.path.join(index_dir, "codebook")).collect():
+            books[int(r["m"])].append((int(r["cid"]), [float(x) for x in r["cv"]]))
+        return {m: sorted(v) for m, v in books.items()}
+
+    books1 = memo(spark, "pq_books", index_dir, build=read_books)
     emb = load_table(spark, sf_dir, "embeddings")
     # probes: per-query nprobe nearest lists over the 16-row centroid
     # table — a bounded collect (the serving layer's routing step)
@@ -3055,10 +3010,7 @@ def ann_ivfpq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         by_q.setdefault(int(r["query_id"]), []).append(int(r["ccid"]))
     all_lists = sorted({c for lists in by_q.values() for c in lists})
     # partition-pruned read of the probed list directories only
-    idx = _LIT_CACHE.get(("pq_idx", index_dir))
-    if idx is None:
-        idx = spark.read.parquet(_os.path.join(index_dir, "codes"))
-        _LIT_CACHE[("pq_idx", index_dir)] = idx
+    idx = open_parquet(spark, _os.path.join(index_dir, "codes"))
     pruned = idx.where(F.col("ccid").cast("int").isin(all_lists))
     qrows = (
         emb.where(F.col("vec_id") < PQ_NQ)
@@ -3421,14 +3373,8 @@ def build_text_index(spark: SparkSession, sf_dir: str, index_dir: str | None = N
 )
 def bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     index_dir = build_text_index(spark, sf_dir)
-    post = _LIT_CACHE.get(("text_idx", index_dir))
-    if post is None:
-        post = spark.read.parquet(os.path.join(index_dir, "postings"))
-        _LIT_CACHE[("text_idx", index_dir)] = post
-    stats1 = _LIT_CACHE.get(("text_idx_stats", index_dir))
-    if stats1 is None:
-        stats1 = spark.read.parquet(os.path.join(index_dir, "stats"))
-        _LIT_CACHE[("text_idx_stats", index_dir)] = stats1
+    post = open_parquet(spark, os.path.join(index_dir, "postings"))
+    stats1 = open_parquet(spark, os.path.join(index_dir, "stats"))
 
     buckets = sorted({_term_bucket(t) for t in QUERY_TERMS})
     pruned = post.where(
@@ -3702,10 +3648,7 @@ FROM r GROUP BY t ORDER BY t
 )
 def ann_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     index_dir = build_ann_index(spark, sf_dir)
-    idx = _LIT_CACHE.get(("ann_idx", index_dir))
-    if idx is None:
-        idx = spark.read.parquet(index_dir)
-        _LIT_CACHE[("ann_idx", index_dir)] = idx
+    idx = open_parquet(spark, index_dir)
     bc = idx.groupBy("t", "key").agg(F.count("*").alias("c"))
     wd = Window.partitionBy("t").orderBy(F.desc("c"), "key")
     r = bc.withColumn("rd", F.row_number().over(wd))
@@ -4263,7 +4206,7 @@ def reciprocal_best_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     # P derived from the corpus (r11, the _knn_pairs convention): one
     # bounded tile at test scale instead of 36, OOM-safe blocks at 100 TB
-    P = max(1, -(-emb.count() // _KNN_BLOCK))
+    P = max(1, -(-_n_vectors(spark, sf_dir) // _KNN_BLOCK))
     blk = F.pmod(F.col("vec_id"), F.lit(P)).cast("int")
     base = emb.select("vec_id", "embedding", (F.col("label") % 2).alias("grp"), blk.alias("blk"))
     left = base.select(
@@ -4853,14 +4796,8 @@ ORDER BY df DESC, term LIMIT {_TIDX_TOP}
 )
 def text_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     index_dir = build_text_index(spark, sf_dir)
-    post = _LIT_CACHE.get(("text_idx", index_dir))
-    if post is None:
-        post = spark.read.parquet(os.path.join(index_dir, "postings"))
-        _LIT_CACHE[("text_idx", index_dir)] = post
-    stats1 = _LIT_CACHE.get(("text_idx_stats", index_dir))
-    if stats1 is None:
-        stats1 = spark.read.parquet(os.path.join(index_dir, "stats"))
-        _LIT_CACHE[("text_idx_stats", index_dir)] = stats1
+    post = open_parquet(spark, os.path.join(index_dir, "postings"))
+    stats1 = open_parquet(spark, os.path.join(index_dir, "stats"))
     s = post.groupBy("term").agg(
         F.count("*").cast("bigint").alias("df"),
         F.sum("tf").cast("bigint").alias("cf"),
@@ -4923,11 +4860,12 @@ def pca_projection_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     # py4j-backed Column dangles if the JVM gateway restarts within the
     # process, while list values are driver-side only and the F.expr
     # construction from them is cheap (ADVICE r10)
-    vals = _LIT_CACHE.get(("pca1_loadings", sf_dir))
-    if vals is None:
-        loads = pca_power_top1(spark, sf_dir).orderBy("dim").collect()
-        vals = [float(r["loading"]) for r in loads]
-        _LIT_CACHE[("pca1_loadings", sf_dir)] = vals
+    vals = memo(
+        spark, "pca1_loadings", sf_dir,
+        build=lambda: [
+            float(r["loading"]) for r in pca_power_top1(spark, sf_dir).orderBy("dim").collect()
+        ],
+    )
     arr = F.expr("array(" + ",".join(f"{v!r}D" for v in vals) + ")")
     p = emb.select(
         "vec_id",
@@ -5661,13 +5599,7 @@ def score_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     docs = load_table(spark, sf_dir, "documents")
-    qvec = _LIT_CACHE.get(("qvec", sf_dir))
-    if qvec is None:
-        row = (
-            emb.where(F.col("vec_id") == QUERY_VEC_ID).select("embedding").first()
-        )
-        qvec = F.expr("array(" + ",".join(f"{float(x)!r}D" for x in row[0]) + ")")
-        _LIT_CACHE[("qvec", sf_dir)] = qvec
+    qvec = _qvec_lit(spark, sf_dir)
     u = (
         docs.where(
             (F.col("doc_id") != QUERY_VEC_ID)
@@ -6145,6 +6077,32 @@ LIMIT 20
 """
 
 
+def _bm25f_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = parallelize_scan(load_table(spark, sf_dir, "documents"))
+    toks_df = docs.select("doc_id", tokens(F.col("text")).alias("toks"))
+    split = toks_df.select(
+        "doc_id",
+        F.slice(F.col("toks"), 1, _BM25F_LEAD).alias("toks_t"),
+        F.expr(
+            f"slice(toks, {_BM25F_LEAD} + 1, greatest(size(toks) - {_BM25F_LEAD}, 0))"
+        ).alias("toks_b"),
+    )
+
+    def eq(term):
+        return lambda x: x == term
+
+    return split.select(
+        "doc_id",
+        F.size("toks_t").alias("lt"),
+        F.size("toks_b").alias("lb"),
+        *[
+            F.size(F.filter(F.col(f"toks_{fld}"), eq(t))).alias(f"tf_{t}_{fld}")
+            for t in QUERY_TERMS
+            for fld in ("t", "b")
+        ],
+    )
+
+
 @register(
     "bm25f_search",
     oracle=_bm25f_oracle(),
@@ -6168,37 +6126,10 @@ def bm25f_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # memoized per-doc field-tf projection (lazy plan handle, no data):
     # the 8 higher-order filter columns + field split cost ~0.3 s of
     # py4j Column construction per builder call when rebuilt inline
-    # (r10 decompose probe measured 0.44 s total builder time, the
-    # _SIG_DF_CACHE rationale). Constants QUERY_TERMS/_BM25F_LEAD are
-    # module-fixed, so the projection is a pure function of sf_dir.
-    with_tf = _SIG_DF_CACHE.get(("bm25f_tf", sf_dir))
-    if with_tf is not None and with_tf.sparkSession is not spark:
-        with_tf = None
-    if with_tf is None:
-        docs = parallelize_scan(load_table(spark, sf_dir, "documents"))
-        toks_df = docs.select("doc_id", tokens(F.col("text")).alias("toks"))
-        split = toks_df.select(
-            "doc_id",
-            F.slice(F.col("toks"), 1, _BM25F_LEAD).alias("toks_t"),
-            F.expr(
-                f"slice(toks, {_BM25F_LEAD} + 1, greatest(size(toks) - {_BM25F_LEAD}, 0))"
-            ).alias("toks_b"),
-        )
-
-        def eq(term):
-            return lambda x: x == term
-
-        with_tf = split.select(
-            "doc_id",
-            F.size("toks_t").alias("lt"),
-            F.size("toks_b").alias("lb"),
-            *[
-                F.size(F.filter(F.col(f"toks_{fld}"), eq(t))).alias(f"tf_{t}_{fld}")
-                for t in QUERY_TERMS
-                for fld in ("t", "b")
-            ],
-        )
-        _SIG_DF_CACHE[("bm25f_tf", sf_dir)] = with_tf
+    # (r10 decompose probe measured 0.44 s total builder time).
+    # Constants QUERY_TERMS/_BM25F_LEAD are module-fixed, so the
+    # projection is a pure function of sf_dir.
+    with_tf = memo(spark, "bm25f_tf", sf_dir, build=lambda: _bm25f_tf(spark, sf_dir))
     stats = with_tf.agg(
         F.count("*").alias("n_total"),
         F.sum("lt").alias("sum_lt"),
@@ -6272,9 +6203,10 @@ def _collect_label_centroids(spark: SparkSession, sf_dir: str):
     aggregate k times. Memoized per corpus dir (r10): two registry
     queries (silhouette_centroid, davies_bouldin) each re-collected
     the same codebook per call — the _pq_train_books class."""
-    cached = _LIT_CACHE.get(("label_cents", sf_dir))
-    if cached is not None:
-        return cached
+    return memo(spark, "label_cents", sf_dir, build=lambda: _label_centroids(spark, sf_dir))
+
+
+def _label_centroids(spark: SparkSession, sf_dir: str):
     emb = parallelize_scan(load_table(spark, sf_dir, "embeddings"))
     cf = (
         emb.select("label", F.posexplode("embedding").alias("pos", "x"))
@@ -6293,11 +6225,9 @@ def _collect_label_centroids(spark: SparkSession, sf_dir: str):
         by_label.setdefault(int(r["label"]), {})[int(r["pos"])] = (
             int(r["microv"]) / 1000000.0
         )
-    cents = [
+    return [
         (lbl, [dims[p] for p in sorted(dims)]) for lbl, dims in sorted(by_label.items())
     ]
-    _LIT_CACHE[("label_cents", sf_dir)] = cents
-    return cents
 
 
 def _centroid_codebook_df(spark: SparkSession, cents) -> DataFrame:
@@ -6752,9 +6682,10 @@ def _pca_top2_state(spark: SparkSession, sf_dir: str):
     matrix-vector collect jobs over the corpus and three registry
     queries each re-derived it per call — it is the trained spectral
     state a serving layer holds, the _pq_train_books class."""
-    cached = _LIT_CACHE.get(("pca_top2_state", sf_dir))
-    if cached is not None:
-        return cached
+    return memo(spark, "pca_top2_state", sf_dir, build=lambda: _pca_top2_iterate(spark, sf_dir))
+
+
+def _pca_top2_iterate(spark: SparkSession, sf_dir: str):
     v0 = [_PCA_V0] * EMB_DIM
     v1 = _pca_mv_collect(spark, sf_dir, v0)
     v2 = _pca_mv_collect(spark, sf_dir, v1)
@@ -6772,9 +6703,7 @@ def _pca_top2_state(spark: SparkSession, sf_dir: str):
     d4 = _seq_dot(m4, v1u)
     w2 = [x - d4 * u for x, u in zip(m4, v1u)]
     lam2 = _seq_dot(w1, m4) / _seq_dot(w1, w1)
-    state = (v1u, w1, w2, lam1, lam2)
-    _LIT_CACHE[("pca_top2_state", sf_dir)] = state
-    return state
+    return (v1u, w1, w2, lam1, lam2)
 
 
 def _pca2_ctes() -> str:

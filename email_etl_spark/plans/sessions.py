@@ -11,16 +11,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from email_etl_spark.cache import register_dir_cache as _reg_cache
+from email_etl_spark.cache import memo
 from email_etl_spark.io import load_table, present_sorted
 from email_etl_spark.plans.registry import register
 
 SESSION_GAP_S = 1800  # 30 minutes
-
-# absorption_within_k's collected |states|²-row transition table,
-# memoized per corpus dir (driver-side rows, no Spark storage to drop)
-_ABSORB_P_CACHE: dict = {}
-_reg_cache(_ABSORB_P_CACHE, lambda key: key)
 
 
 @register(
@@ -2940,10 +2935,7 @@ def absorption_within_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rows are memoized per corpus dir (the pq-books class — the
     # table is the trained chain a serving layer holds), so repeated
     # calls skip the scan+window job entirely.
-    rows = _ABSORB_P_CACHE.get(sf_dir)
-    if rows is None:
-        rows = p_built.collect()
-        _ABSORB_P_CACHE[sf_dir] = rows
+    rows = memo(spark, "absorb_p", sf_dir, build=p_built.collect)
     p = spark.createDataFrame(rows, "a string, b string, p double")
     states = p.select("a").distinct()
     tgt = p.where(F.col("b") == ABSORB_TARGET).select("a", F.col("p").alias("p1"))

@@ -113,9 +113,9 @@ def test_compaction_invalidates_serving_caches(spark, tmp_path):
     must DROP every cache entry under the index root — re-querying
     through the cache then sees the post-compact data instead of a
     stale listing (or an error on the deleted .old path)."""
-    from email_etl_spark.cache import invalidate_under
-    from email_etl_spark.plans.dedup import _IDX_CACHE
-    from email_etl_spark.plans.search import _LIT_CACHE
+    from email_etl_spark.cache import invalidate_under, memo
+    from email_etl_spark.io import open_parquet
+    from email_etl_spark.plans.search import _planes_literal
 
     src = str(tmp_path / "vecs")
     root = str(tmp_path / "index")
@@ -127,41 +127,32 @@ def test_compaction_invalidates_serving_caches(spark, tmp_path):
     compact_ann_index(spark, root)
     base = os.path.join(root, "base")
 
-    # serve through memoized handles, the way ann_lsh_indexed /
+    # serve through the memoized handle, the way ann_lsh_indexed /
     # dedup_minhash_indexed do
     def serve() -> set:
-        idx = _LIT_CACHE.get(("ann_idx", base))
-        if idx is None:
-            idx = spark.read.parquet(base)
-            _LIT_CACHE[("ann_idx", base)] = idx
+        idx = open_parquet(spark, base)
         return {r.vec_id for r in idx.select("vec_id").distinct().collect()}
 
-    _IDX_CACHE[base] = spark.read.parquet(base)
+    old = open_parquet(spark, base)
     assert serve() == {0, 1, 2}
+    assert open_parquet(spark, base) is old  # held open
 
     # new vectors arrive; compaction swaps the base
     _drop_vectors(spark, src, [3, 4], "d2")
     run_ann_index_stream(_stream(spark, src), root, ck)
     compact_ann_index(spark, root)
 
-    # both registered caches dropped their entries under the root...
-    assert ("ann_idx", base) not in _LIT_CACHE
-    assert base not in _IDX_CACHE
+    # the handle under the root was dropped...
+    new = open_parquet(spark, base)
+    assert new is not old
     # ...and re-serving through the same code path sees the new data
     assert serve() == {0, 1, 2, 3, 4}
 
-    # plan constants / unrelated directories are untouched (save and
-    # restore "planes": other tests resolve the real literal from it)
-    saved_planes = _LIT_CACHE.get("planes")
-    try:
-        _LIT_CACHE["planes"] = "sentinel"
-        _LIT_CACHE[("ann_idx", "/somewhere/else")] = "other"
-        assert invalidate_under(root) == 1  # only the entry serve() re-added
-        assert _LIT_CACHE["planes"] == "sentinel"
-        assert _LIT_CACHE[("ann_idx", "/somewhere/else")] == "other"
-    finally:
-        del _LIT_CACHE[("ann_idx", "/somewhere/else")]
-        if saved_planes is None:
-            _LIT_CACHE.pop("planes", None)
-        else:
-            _LIT_CACHE["planes"] = saved_planes
+    # plan constants and entries for unrelated directories are untouched
+    planes = _planes_literal()
+    elsewhere = str(tmp_path / "elsewhere")
+    other = memo(spark, "other", elsewhere, build=dict)
+    assert invalidate_under(root) == 1  # only the entry serve() re-added
+    assert _planes_literal() is planes
+    assert memo(spark, "other", elsewhere, build=dict) is other
+    invalidate_under(elsewhere)

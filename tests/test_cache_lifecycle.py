@@ -42,37 +42,49 @@ def test_dedup_family_repeat_calls_do_not_accumulate_storage(spark):
 
 
 def test_invalidate_under_unpersists_corpus_handles(spark):
+    from email_etl_spark.io import load_table
     from email_etl_spark.plans import curation, dedup
 
     REGISTRY["dedup_clusters"].builder(spark, SF).collect()
     REGISTRY["fuzzy_decontaminate"].builder(spark, SF).collect()
-    assert any(k[0] == SF for k in dedup._SH_CACHE)
-    assert any(k[0] == SF for k in dedup._CLOSURE_CACHE)
-    assert SF in curation._DECON_SH_CACHE
+    docs = load_table(spark, SF, "documents")
+    k, thr = 3, dedup.MINHASH_THRESHOLD
 
-    sh = dedup._SH_CACHE[(SF, 3)]
-    decon = curation._DECON_SH_CACHE[SF]
+    # memoized: each helper returns the same handle twice, in memory
+    sh = dedup._shingle_table(docs, k, sf_dir=SF)
+    edges = dedup._closure_edges(docs, k, thr, sf_dir=SF)
+    decon = curation._bench_flagged_shingles(spark, SF)
+    assert sh is dedup._shingle_table(docs, k, sf_dir=SF)
+    assert edges is dedup._closure_edges(docs, k, thr, sf_dir=SF)
+    assert decon is curation._bench_flagged_shingles(spark, SF)
+    assert docs is load_table(spark, SF, "documents")
     assert sh.storageLevel.useMemory and decon.storageLevel.useMemory
 
     dropped = invalidate_under(SF)
     assert dropped >= 3
-    assert not any(k[0] == SF for k in dedup._SH_CACHE)
-    assert not any(k[0] == SF for k in dedup._CLOSURE_CACHE)
-    assert SF not in curation._DECON_SH_CACHE
-    # the blocks were actually released, not just the dict entries
+    # every entry under the corpus went, scan handles included
+    assert invalidate_under(SF) == 0
+    # the blocks were actually released, not just the entries
     assert not sh.storageLevel.useMemory
     assert not decon.storageLevel.useMemory
+    # and the helpers build new handles
+    docs2 = load_table(spark, SF, "documents")
+    assert docs2 is not docs
+    assert dedup._shingle_table(docs2, k, sf_dir=SF) is not sh
+    assert dedup._closure_edges(docs2, k, thr, sf_dir=SF) is not edges
+    assert curation._bench_flagged_shingles(spark, SF) is not decon
 
 
 def test_semdedup_assignment_memoized_and_invalidated(spark):
     from email_etl_spark.plans import dedup
 
     REGISTRY["semdedup_prune"].builder(spark, SF).collect()
-    assert (SF,) in dedup._SEMDEDUP_CACHE
-    a = dedup._SEMDEDUP_CACHE[(SF,)]
+    a = dedup._semdedup_assignment(spark, SF)
+    assert a is dedup._semdedup_assignment(spark, SF)
     assert a.storageLevel.useMemory
     n = _n_persistent_rdds(spark)
     REGISTRY["semdedup_prune"].builder(spark, SF).collect()  # reuses
     assert _n_persistent_rdds(spark) <= n
     invalidate_under(SF)
-    assert (SF,) not in dedup._SEMDEDUP_CACHE
+    assert not a.storageLevel.useMemory
+    assert dedup._semdedup_assignment(spark, SF) is not a

@@ -12,25 +12,25 @@ the candidate stream at forced P carries no duplicate (q, n) pair.
 
 from __future__ import annotations
 
-import pytest
-
 import email_etl_spark.plans.search as S
+from email_etl_spark.cache import invalidate_under
 from email_etl_spark.plans.registry import REGISTRY
 from tests.conftest import SF_SMOKE
 
 
 def _run_knn(spark, block):
+    # the pair table is memoized per corpus and P is derived when it is
+    # built: drop the corpus memos so this block size takes effect, and
+    # again afterwards so later callers get the default tiling
     old_block = S._KNN_BLOCK
-    old_cache = dict(S._KNN_CACHE)
-    S._KNN_CACHE.clear()
+    invalidate_under(SF_SMOKE)
     S._KNN_BLOCK = block
     try:
         rows = REGISTRY["knn_join"].builder(spark, SF_SMOKE).collect()
         return sorted((r.vec_id, r.rank, r.neighbor_id, r.cos_sim) for r in rows)
     finally:
         S._KNN_BLOCK = old_block
-        S._KNN_CACHE.clear()
-        S._KNN_CACHE.update(old_cache)
+        invalidate_under(SF_SMOKE)
 
 
 def test_knn_output_is_tiling_invariant(spark):
@@ -43,13 +43,9 @@ def test_tiled_candidate_stream_has_no_duplicate_pairs(spark):
     """The exactly-once ownership proof behind the deleted distinct():
     every ordered (q, n) candidate appears at most once even with many
     tiles in play."""
-    from pyspark.sql import functions as F
-    from email_etl_spark.io import load_table
-
     old_block = S._KNN_BLOCK
+    invalidate_under(SF_SMOKE)
     S._KNN_BLOCK = 150
-    old_cache = dict(S._KNN_CACHE)
-    S._KNN_CACHE.clear()
     try:
         # rebuild the candidate stream exactly as _knn_pairs does, by
         # running the pipeline and checking the pre-aggregation pair
@@ -70,5 +66,19 @@ def test_tiled_candidate_stream_has_no_duplicate_pairs(spark):
             assert sorted(rks) == list(range(1, len(rks) + 1))
     finally:
         S._KNN_BLOCK = old_block
-        S._KNN_CACHE.clear()
-        S._KNN_CACHE.update(old_cache)
+        invalidate_under(SF_SMOKE)
+
+
+def test_reciprocal_best_match_reuses_the_row_count(spark):
+    """The tile count of reciprocal_best_match comes from the same
+    memoized embeddings row count as knn_join's, so once knn_join has
+    run on a corpus, building reciprocal_best_match starts no job."""
+    REGISTRY["knn_join"].builder(spark, SF_SMOKE).collect()
+    sc = spark.sparkContext
+    group = "test_reciprocal_best_match_reuses_the_row_count"
+    sc.setJobGroup(group, "build reciprocal_best_match")
+    try:
+        REGISTRY["reciprocal_best_match"].builder(spark, SF_SMOKE)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0

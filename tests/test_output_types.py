@@ -25,16 +25,15 @@ from __future__ import annotations
 import pytest
 
 from email_etl_spark.plans import REGISTRY
+from tests.conftest import SF_SMOKE
 from tests.oracle import duckdb_conn
-
-SF_DIR = "/root/testdata/sf0.001"
 
 _BANNED = ("DECIMAL", "HUGEINT", "UHUGEINT")
 
 
 @pytest.fixture(scope="module")
 def con():
-    return duckdb_conn(SF_DIR)
+    return duckdb_conn(SF_SMOKE)
 
 
 def test_no_decimal_or_hugeint_declared_outputs(con):
@@ -43,7 +42,7 @@ def test_no_decimal_or_hugeint_declared_outputs(con):
         if not q.oracle:
             continue
         rows = con.execute(
-            "DESCRIBE " + q.oracle.replace("__SF_DIR__", SF_DIR)
+            "DESCRIBE " + q.oracle.replace("__SF_DIR__", SF_SMOKE)
         ).fetchall()
         bad = [(r[0], r[1]) for r in rows if any(b in r[1].upper() for b in _BANNED)]
         if bad:
@@ -79,7 +78,7 @@ def test_r10_red_queries_ship_driver_safe_types(con):
     }
     for name, cols in expect.items():
         rows = con.execute(
-            "DESCRIBE " + REGISTRY[name].oracle.replace("__SF_DIR__", SF_DIR)
+            "DESCRIBE " + REGISTRY[name].oracle.replace("__SF_DIR__", SF_SMOKE)
         ).fetchall()
         got = {r[0]: r[1] for r in rows}
         for col, want in cols.items():
