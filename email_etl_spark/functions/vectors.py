@@ -38,97 +38,7 @@ def cosine(a: Column, b: Column) -> Column:
 
 
 def cosine_rounded(a: Column, b: Column, digits: int = 4) -> Column:
-    """Dispatching cosine: JVM fold by default, Arrow kernel when
-    SPARK_GRAFT_VECTOR_KERNEL=pandas. Both kernels are bit-identical
-    (tests/test_properties.py proves it over every corpus pair), so
-    the switch changes the physical path only, never a result.
-
-    Measured crossover: per-task Arrow setup (~30-100 ms) makes the
-    pandas path a net LOSS below ~10^5 vector rows per task (the sf0.1
-    bench corpus is 2k rows), while on 4M-pair batches it runs 2x the
-    JVM fold. Clusters chewing real corpora should set the env var;
-    small-batch/latency paths keep the fold."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_VECTOR_KERNEL") == "pandas":
-        return F.round(cosine_fast(a, b), digits)
     return F.round(cosine(a, b), digits)
-
-
-# ---------------------------------------------------------------------------
-# Arrow-vectorized scale kernel. The JVM higher-order-function fold
-# above is interpreted per element (lambda functions don't codegen).
-# This pandas_udf replays the EXACT same operation sequence per
-# element — acc = acc + x_j*y_j in ascending j, each step an
-# IEEE-double mul then add, then dot/(sqrt(na)*sqrt(nb)) — so its
-# output is bit-identical to the fold (and to the DuckDB oracle twin)
-# by construction, while evaluating whole Arrow batches per numpy
-# instruction instead of one element per interpreter dispatch.
-# Rounding stays JVM-side (F.round on top), so the boundary semantics
-# are unchanged.
-# ---------------------------------------------------------------------------
-
-def _fold_cosine_kernel(a, b):
-    import numpy as np
-    import pandas as pd
-
-    if len(a) == 0:
-        return pd.Series([], dtype="float64")
-    A = np.stack(a.to_numpy()).astype(np.float64)
-    B = np.stack(b.to_numpy()).astype(np.float64)
-    n, d = A.shape
-    dot = np.zeros(n)
-    na = np.zeros(n)
-    nb = np.zeros(n)
-    for j in range(d):  # sequential in j == the fold's element order
-        x, y = A[:, j], B[:, j]
-        dot += x * y
-        na += x * x
-        nb += y * y
-    denom = np.sqrt(na) * np.sqrt(nb)
-    safe = np.where(denom == 0.0, 1.0, denom)
-    return pd.Series(np.where(denom == 0.0, 0.0, dot / safe))
-
-
-_cosine_fold_udf = None
-
-
-def cosine_fast(a: Column, b: Column) -> Column:
-    global _cosine_fold_udf
-    if _cosine_fold_udf is None:  # lazy: pandas_udf needs an active session
-        _cosine_fold_udf = F.pandas_udf(_fold_cosine_kernel, "double")
-    return _cosine_fold_udf(a, b)
-
-
-def cosine_fast_rounded(a: Column, b: Column, digits: int = 4) -> Column:
-    return F.round(cosine_fast(a, b), digits)
-
-
-def sign_bits_fast(emb: Column, planes: list[list[float]]) -> Column:
-    """'0'/'1' sign string of the dot products of a vector column
-    against a constant hyperplane matrix — the random-hyperplane-LSH
-    signature kernel. Same bit-identity argument as cosine_fast: the
-    accumulation `acc[i,p] += x[i,j] * planes[p][j]` runs sequentially
-    in j, so every (vector, plane) dot replays the JVM fold's exact
-    IEEE operation sequence while numpy evaluates whole (batch x
-    planes) slabs per instruction."""
-    import numpy as np
-
-    P = np.asarray(planes, dtype=np.float64)  # (n_planes, dim)
-
-    def kernel(batch):
-        import pandas as pd
-
-        if len(batch) == 0:
-            return pd.Series([], dtype=object)
-        X = np.stack(batch.to_numpy()).astype(np.float64)  # (n, dim)
-        acc = np.zeros((X.shape[0], P.shape[0]))
-        for j in range(X.shape[1]):  # sequential in j == fold order
-            acc += X[:, j][:, None] * P[:, j][None, :]
-        bits = np.where(acc >= 0.0, "1", "0")
-        return pd.Series(["".join(row) for row in bits])
-
-    return F.pandas_udf(kernel, "string")(emb)
 
 
 # DuckDB twin used inside oracle SQL strings. A library cosine

@@ -540,94 +540,28 @@ WHERE {duckdb_cosine("a.embedding", "b.embedding")} >= {EMB_THRESHOLD}
 ORDER BY vec_a, vec_b
 """,
     doc=(
-        "Embedding-cosine near-dup pairs (SURVEY §2.E): block-tiled NumPy "
-        "matmul prefilter (vectors hash into P blocks; every block-pair "
-        "tile is one bounded task with a 0.01 margin) then exact "
-        "sequential-fold verification on the survivors. Fully distributed: "
-        "no driver collect, no corpus broadcast — the semantics are exact "
-        "all-pairs, so the scale cost is the P·(P+1)/2 tile fan-out, each "
-        "tile sized to fit one task."
+        "Embedding-cosine near-dup pairs (SURVEY §2.E): the knn_join "
+        "block-tile kernel with a similarity floor instead of k — vectors "
+        "fall into P = ceil(n/4096) mod-blocks, every block-pair tile is "
+        "one bounded NumPy matmul task that keeps the cells within the "
+        "4-digit rounding tolerance of the threshold, then exact "
+        "sequential-fold verification on the survivors. Fully "
+        "distributed: no driver collect, no corpus broadcast, no "
+        "candidate distinct (each ordered pair comes from exactly one "
+        "tile; the vec_a < vec_b half is kept) — the semantics are exact "
+        "all-pairs, and P grows with the corpus so each tile fits one "
+        "task."
     ),
 )
 def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Exact all-pairs contract → enumerate every vector pair exactly
-    # once via block tiling: vec v belongs to block v mod P; tile (i,j)
-    # (i<=j) compares block i against block j in a single applyInPandas
-    # task. Each row is replicated ~P times (its tile row + tile
-    # column), which is the standard exact-all-pairs cost; P scales
-    # with corpus size so one block's matrix always fits a task.
-    P = 8
-    margin = 0.01  # >> any fp divergence between matmul and exact fold
+    from email_etl_spark.plans.search import _tile_pairs
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    blk = F.pmod(F.col("vec_id"), F.lit(P)).cast("int")
-    base = emb.select("vec_id", "embedding", blk.alias("blk"))
-    # role 0 = tile-row side (pa fixed), role 1 = tile-column side
-    left = base.select(
-        "vec_id",
-        "embedding",
-        F.col("blk").alias("pa"),
-        F.explode(F.sequence(F.col("blk"), F.lit(P - 1))).alias("pb"),
-        F.lit(0).alias("role"),
-    )
-    right = base.select(
-        "vec_id",
-        "embedding",
-        F.explode(F.sequence(F.lit(0), F.col("blk"))).alias("pa"),
-        F.col("blk").alias("pb"),
-        F.lit(1).alias("role"),
-    )
-
-    def tile(pdf):
-        import numpy as np
-        import pandas as pd
-
-        a = pdf[pdf["role"] == 0]
-        b = pdf[pdf["role"] == 1]
-        if a.empty or b.empty:
-            return pd.DataFrame({"vec_a": [], "vec_b": []}).astype("int64")
-
-        def unit(rows):
-            m = np.stack(rows["embedding"].to_numpy()).astype(np.float64)
-            n = np.linalg.norm(m, axis=1)
-            n[n == 0] = 1.0
-            return m / n[:, None]
-
-        a_ids = a["vec_id"].to_numpy()
-        b_ids = b["vec_id"].to_numpy()
-        sims = unit(a) @ unit(b).T
-        ia, ib = np.where(sims >= EMB_THRESHOLD - margin)
-        # an off-diagonal tile sees a pair in ONE orientation only
-        # (row side = block pa, column side = block pb), so normalize
-        # to (min, max) instead of filtering a<b — the diagonal tile's
-        # double hit dedups via the distinct below.
-        hit_a, hit_b = a_ids[ia], b_ids[ib]
-        keep = hit_a != hit_b
-        hit_a, hit_b = hit_a[keep], hit_b[keep]
-        return pd.DataFrame(
-            {"vec_a": np.minimum(hit_a, hit_b), "vec_b": np.maximum(hit_a, hit_b)}
-        )
-
-    cand = (
-        left.unionByName(right)
-        .groupBy("pa", "pb")
-        .applyInPandas(tile, schema="vec_a long, vec_b long")
-        .distinct()
-    )
-
-    # exact verification: the oracle-identical sequential fold, on the
-    # survivors only. No broadcast hint on the candidate side (pair
-    # volume is corpus-proportional under near-dup hubs; AQE broadcasts
-    # at runtime when small) — the embedding table must stream either
-    # way, never broadcast.
-    ea = emb.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("ea"))
-    eb = emb.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("eb"))
-    cos = cosine_rounded(F.col("ea"), F.col("eb"))
+    # the kernel emits both orientations of each kept pair exactly
+    # once; the q < n half is the (vec_a, vec_b) contract, no distinct
     return (
-        cand.join(ea, "vec_a")
-        .join(eb, "vec_b")
-        .select("vec_a", "vec_b", cos.alias("cos_sim"))
-        .where(F.col("cos_sim") >= EMB_THRESHOLD)
+        _tile_pairs(spark, sf_dir, floor=EMB_THRESHOLD)
+        .where((F.col("q") < F.col("n")) & (F.col("c") >= EMB_THRESHOLD))
+        .select(F.col("q").alias("vec_a"), F.col("n").alias("vec_b"), F.col("c").alias("cos_sim"))
         .orderBy("vec_a", "vec_b")
     )
 

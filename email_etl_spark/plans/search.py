@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from email_etl_spark.cache import memo
 from email_etl_spark.functions import built_once
 from email_etl_spark.functions.text import tokens
-from email_etl_spark.functions.vectors import cosine_rounded, duckdb_cosine, sign_bits_fast
+from email_etl_spark.functions.vectors import cosine_rounded, duckdb_cosine
 from email_etl_spark.io import load_table, open_parquet, parallelize_scan
 from email_etl_spark.plans.registry import register
 
@@ -241,21 +241,12 @@ def _planes_literal():
 def _sig_spark(emb_col) -> list:
     """One LSH signature column per table: an 8-char '0'/'1' string.
 
-    Two bit-identical kernels (same IEEE operation sequence per
-    (vector, plane) dot — see vectors.py):
-    - default: all 32 hyperplanes as ONE nested-array literal, sign
-      bits from a single transform lambda (one compiled expression
-      applied 32 times, not 32 inlined fold trees);
-    - SPARK_GRAFT_VECTOR_KERNEL=pandas: Arrow kernel
-      (sign_bits_fast), which wins once tasks carry ~10^5+ vectors.
-    The four substrings below reference one expression either way, so
-    the signature work runs once per row."""
-    if os.environ.get("SPARK_GRAFT_VECTOR_KERNEL") == "pandas":
-        bits = sign_bits_fast(emb_col, _FLAT_PLANES)
-        return [
-            F.substring(bits, 1 + t * LSH_BITS, LSH_BITS).alias(f"sig{t}")
-            for t in range(LSH_TABLES)
-        ]
+    All 32 hyperplanes are ONE nested-array literal and the sign bits
+    come from a single transform lambda (one compiled expression
+    applied 32 times, not 32 inlined fold trees); each dot replays the
+    oracle's left-to-right IEEE accumulation. The four substrings below
+    reference that one expression, so the signature work runs once per
+    row."""
     bit_arr = F.transform(
         _planes_literal(),
         lambda plane: F.when(
@@ -272,6 +263,23 @@ def _sig_spark(emb_col) -> list:
         F.array_join(F.slice(bit_arr, 1 + t * LSH_BITS, LSH_BITS), "").alias(f"sig{t}")
         for t in range(LSH_TABLES)
     ]
+
+
+def _lsh_buckets(vectors: DataFrame) -> DataFrame:
+    """(vec_id, embedding) → one (vec_id, t, key) row per LSH table,
+    key the vector's signature in table t: the bucket table of the
+    persisted index (build_ann_index, streaming/ann_index.py) and of
+    every in-plan (t, key) equality join."""
+    sigs = vectors.select("vec_id", *_sig_spark(F.col("embedding")))
+    tables = F.array(
+        *[
+            F.struct(F.lit(t).alias("t"), F.col(f"sig{t}").alias("key"))
+            for t in range(LSH_TABLES)
+        ]
+    )
+    return sigs.select("vec_id", F.explode(tables).alias("bk")).select(
+        "vec_id", F.col("bk.t").alias("t"), F.col("bk.key").alias("key")
+    )
 
 
 def _sig_sql(emb_expr: str, t: int) -> str:
@@ -442,17 +450,7 @@ def build_ann_index(spark: SparkSession, sf_dir: str, index_dir: str | None = No
     )
     if not _os.path.exists(_os.path.join(index_dir, "_SUCCESS")):
         emb = parallelize_scan(load_table(spark, sf_dir, "embeddings"))
-        sigs = emb.select("vec_id", *_sig_spark(F.col("embedding")))
-        tables = F.array(
-            *[
-                F.struct(F.lit(t).alias("t"), F.col(f"sig{t}").alias("key"))
-                for t in range(LSH_TABLES)
-            ]
-        )
-        buckets = sigs.select("vec_id", F.explode(tables).alias("bk")).select(
-            "vec_id", F.col("bk.t").alias("t"), F.col("bk.key").alias("key")
-        )
-        write_partitioned(buckets, index_dir, ["t", "key"], sort_col="vec_id")
+        write_partitioned(_lsh_buckets(emb), index_dir, ["t", "key"], sort_col="vec_id")
     return index_dir
 
 
@@ -474,8 +472,7 @@ def build_ann_index(spark: SparkSession, sf_dir: str, index_dir: str | None = No
 )
 def ann_lsh_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     index_dir = build_ann_index(spark, sf_dir)
-    qvec = _qvec_list(spark, sf_dir)
-    keys = _query_bucket_keys(qvec)
+    keys = _query_bucket_keys(_qvec_list(spark, sf_dir))
     # listing the ~1k bucket dirs costs ~1 s of driver-side discovery
     # per fresh read.parquet, so the handle is held open
     idx = open_parquet(spark, index_dir)
@@ -490,14 +487,13 @@ def ann_lsh_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     emb = load_table(spark, sf_dir, "embeddings")
-    qlit = F.expr("array(" + ",".join(f"{x!r}D" for x in qvec) + ")")
     return (
         F.broadcast(cand_ids)
         .join(emb, "vec_id")
         .select(
             "vec_id",
             "label",
-            cosine_rounded(F.col("embedding"), qlit).alias("similarity"),
+            cosine_rounded(F.col("embedding"), _qvec_lit(spark, sf_dir)).alias("similarity"),
         )
         .orderBy(F.desc("similarity"), "vec_id")
         .limit(5)
@@ -974,17 +970,19 @@ FROM ranked WHERE rk <= {_KNN_K} ORDER BY vec_id, rank
         f"top-{_KNN_K} cosine neighbors — the all-to-all variant of ANN "
         "(semantic clustering, hard-negative mining, citation-graph "
         "construction). Scale shape: block tiling (vec mod P), each "
-        "(i,j) tile one bounded NumPy matmul task that emits only its "
-        "LOCAL top-(k+slack) per row — so the shuffle carries O(P·k) "
-        "candidate rows per vector, never the O(n) similarity row — "
-        "then survivors are exact-fold verified (the matmul is a "
-        "pruner, not the contract) and a per-query sorted-truncate "
-        "aggregation takes the global top-k with a deterministic "
-        "(cos desc, id) tiebreak (bounded P·(k+slack) list per query, "
-        "map-side combined — no corpus-wide sort). No driver collect, "
-        "no corpus broadcast; P = ceil(n/4096) grows with the corpus "
-        "so a block always fits a task. ann_lsh/ann_ivf are the "
-        "approximate fast paths when recall<1 is acceptable."
+        "(i,j) tile one bounded NumPy matmul task that keeps, per row, "
+        "every cell within the 4-digit rounding tolerance of its LOCAL "
+        "k-th similarity — a threshold, not a count, so every candidate "
+        "tied at the k-th rounded value survives, and the shuffle "
+        "carries O(P·k) candidate rows per vector on tie-free data, "
+        "never the O(n) similarity row — then survivors are exact-fold "
+        "verified (the matmul is a pruner, not the contract) and a "
+        "per-query sorted-truncate aggregation takes the global top-k "
+        "with a deterministic (cos desc, id) tiebreak (map-side "
+        "combined — no corpus-wide sort). No driver collect, no corpus "
+        "broadcast; P = ceil(n/4096) grows with the corpus so a block "
+        "always fits a task. ann_lsh/ann_ivf are the approximate fast "
+        "paths when recall<1 is acceptable."
     ),
 )
 def knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -995,48 +993,67 @@ _KNN_BLOCK = 4096  # tile side in rows: one tile's similarity matrix
 # is at most 4096² float64 = 128 MB — a bounded per-task allocation at
 # any corpus size (guide §5)
 
+# The tile kernel's pruning tolerance. Consumers compare cosines
+# rounded to 4 digits, and two values that round to the same 4-digit
+# result differ by less than 1e-4; 1e-9 covers the float64 matmul vs
+# sequential-fold divergence (~1e-15 at 64 dims) with a wide margin.
+_TILE_TOL = 1e-4 + 1e-9
+
 
 def _n_vectors(spark: SparkSession, sf_dir: str) -> int:
-    """Row count of the embeddings table, memoized per corpus: three
-    builders (_knn_pairs, reciprocal_best_match, _semdedup_assignment)
-    derive their tile or cluster count from it, and each count is a
-    job."""
+    """Row count of the embeddings table, memoized per corpus: the tile
+    kernel (_tile_pairs) and _semdedup_assignment derive their tile or
+    cluster count from it, and each count is a job."""
     return memo(spark, "rows", sf_dir, build=lambda: load_table(spark, sf_dir, "embeddings").count())
 
 
-def _knn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # memoized: FOUR registry queries (knn_join, hub_vectors,
-    # label_noise_knn, knn_confusion) consume the same O(n²)-tiled pair
-    # computation, and each lazy consumer re-ran the whole pipeline
-    # (~12 s each at sf0.1, r10 measurement)
-    return memo(spark, "knn", sf_dir, build=lambda: _knn_pairs_build(spark, sf_dir))
+def _tile_pairs(
+    spark: SparkSession,
+    sf_dir: str,
+    *,
+    k: int | None = None,
+    floor: float | None = None,
+    group=None,
+) -> DataFrame:
+    """The exact all-pairs block-tile kernel: (q, n, c) rows, c the
+    exact-fold rounded cosine, for every ordered pair q != n that the
+    per-row rule keeps. Exactly one of:
+    - k: keep each row's cells with sim >= (the row's local k-th sim)
+      - _TILE_TOL. A local k-th is never above the global k-th, so
+      every pair that can reach the row's global top-k under the
+      (cos DESC, id ASC) contract survives, ties at the k-th rounded
+      value included;
+    - floor: keep cells with sim >= floor - _TILE_TOL, every pair whose
+      rounded cosine can reach `floor`.
+    `group` (a column) limits the pairs to ones across groups.
 
+    Vector v belongs to block v mod P, P = ceil(n/_KNN_BLOCK) from the
+    memoized row count, so one tile's matrix is bounded at any corpus
+    size. Tile (i, j), i <= j, is one applyInPandas task: block i as
+    role-0 rows against block j as role-1 columns, scored by a float64
+    NumPy matmul that only prunes — kept pairs are re-scored by the
+    oracle-identical sequential fold (cosine_rounded).
 
-def _knn_pairs_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    slack = 8  # local-rank cushion >> any matmul-vs-fold fp divergence
-
+    No distinct() on the candidate stream: each ordered (q, n) pair is
+    emitted by exactly one (tile, direction). Its block pair selects
+    the tile (min, max); the row direction emits it iff blk_q <= blk_n,
+    the column direction iff blk_q > blk_n (the diagonal tile holds one
+    block in both roles, so only its row direction runs), and within a
+    direction each row's kept cells are distinct columns."""
+    cross = group is not None
     emb = load_table(spark, sf_dir, "embeddings")
-    # r11: P DERIVED from the corpus (the doc always promised "P grows
-    # with the corpus"; the r10 code pinned P=8, which is 36 tiny tiles
-    # + 9x row duplication at test scale and an OOM at 100 TB where a
-    # block would hold n/8 rows). ceil(n/4096) keeps every tile's
-    # matmul bounded; the count is one memoized job (_n_vectors).
-    # Candidate superset proof is P-independent: each unordered pair
-    # lands in exactly one tile, and a global top-k member is
-    # necessarily a local top-k member of its tile.
     P = max(1, -(-_n_vectors(spark, sf_dir) // _KNN_BLOCK))
     blk = F.pmod(F.col("vec_id"), F.lit(P)).cast("int")
-    base = emb.select("vec_id", "embedding", blk.alias("blk"))
+    cols = ["vec_id", "embedding"] + (["grp"] if cross else [])
+    base = emb.select("vec_id", "embedding", *([group.alias("grp")] if cross else []), blk.alias("blk"))
     left = base.select(
-        "vec_id",
-        "embedding",
+        *cols,
         F.col("blk").alias("pa"),
         F.explode(F.sequence(F.col("blk"), F.lit(P - 1))).alias("pb"),
         F.lit(0).alias("role"),
     )
     right = base.select(
-        "vec_id",
-        "embedding",
+        *cols,
         F.explode(F.sequence(F.lit(0), F.col("blk"))).alias("pa"),
         F.col("blk").alias("pb"),
         F.lit(1).alias("role"),
@@ -1061,74 +1078,64 @@ def _knn_pairs_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         b_ids = b["vec_id"].to_numpy()
         sims = unit(a) @ unit(b).T
         sims[a_ids[:, None] == b_ids[None, :]] = -np.inf  # mask self
-        kk = _KNN_K + slack
+        if cross:
+            sims[a["grp"].to_numpy()[:, None] == b["grp"].to_numpy()[None, :]] = -np.inf
+        directions = [(a_ids, b_ids, sims)]
+        if a.iloc[0]["pa"] != a.iloc[0]["pb"]:
+            directions.append((b_ids, a_ids, sims.T))
         qs, ns = [], []
-        # a-rows take neighbors from b; on off-diagonal tiles b-rows
-        # symmetrically take neighbors from a (the diagonal tile holds
-        # the same rows in both roles, so one direction covers it)
-        for ids_q, ids_n, s in (
-            (a_ids, b_ids, sims),
-            (b_ids, a_ids, sims.T) if a.iloc[0]["pa"] != a.iloc[0]["pb"] else (None, None, None),
-        ):
-            if ids_q is None:
-                continue
-            # r11 (guide §4.2): vectorized local top-(k+slack) —
-            # argpartition is O(cols) per row vs argsort's O(cols log
-            # cols), and the flatten is pure NumPy (the old per-row
-            # Python loop walked every query row). Candidates are an
-            # unordered superset (the exact-fold verify + global top-k
-            # downstream impose the contract order), so no sort needed.
-            kk_eff = min(kk, s.shape[1])
-            if kk_eff < s.shape[1]:
-                top = np.argpartition(-s, kk_eff - 1, axis=1)[:, :kk_eff]
+        for ids_q, ids_n, s in directions:
+            if k is None:
+                cut = floor
+            elif k < s.shape[1]:
+                # each row's local k-th largest: np.partition is O(cols)
+                # per row, no sort
+                cut = -np.partition(-s, k - 1, axis=1)[:, k - 1 : k]
             else:
-                top = np.broadcast_to(np.arange(s.shape[1]), s.shape).copy()
-            vals = np.take_along_axis(s, top, axis=1)
-            mask = np.isfinite(vals)
-            qs.append(np.repeat(ids_q, mask.sum(axis=1)))
-            ns.append(ids_n[top[mask]])
-        return pd.DataFrame({
-            "q": np.concatenate(qs) if qs else np.empty(0, dtype="int64"),
-            "n": np.concatenate(ns) if ns else np.empty(0, dtype="int64"),
-        })
+                cut = -np.inf
+            rows, cells = np.nonzero((s >= cut - _TILE_TOL) & np.isfinite(s))
+            qs.append(ids_q[rows])
+            ns.append(ids_n[cells])
+        return pd.DataFrame({"q": np.concatenate(qs), "n": np.concatenate(ns)})
 
-    # no distinct() on the candidate stream (r11): each ordered (q, n)
-    # pair is emitted by EXACTLY one (tile, direction) — the pair's
-    # block pair (blk_q, blk_n) selects the tile (min, max); the
-    # a-direction emits it iff blk_q <= blk_n, the b-direction iff
-    # blk_q >= blk_n, and the diagonal runs the a-direction only — and
-    # within a direction the per-row top indices are unique. A
-    # duplicate would surface as a repeated neighbor_id in the oracle
-    # diff; the deleted distinct was a full extra shuffle+aggregate of
-    # the candidate stream.
     cand = (
         left.unionByName(right)
         .groupBy("pa", "pb")
         .applyInPandas(tile, schema="q long, n long")
     )
-
-    # exact-fold verification on candidates only, then the global top-k.
-    # No broadcast hint: the candidate set is O(n·k) — corpus-
-    # proportional by construction — so a forced broadcast is an OOM at
-    # scale; AQE picks broadcast at runtime when genuinely small.
+    # exact-fold verification on the candidates only. No broadcast
+    # hint: the candidate set is corpus-proportional by construction,
+    # so a forced broadcast is an OOM at scale; AQE picks broadcast at
+    # runtime when genuinely small.
     eq = emb.select(F.col("vec_id").alias("q"), F.col("embedding").alias("eq"))
     en = emb.select(F.col("vec_id").alias("n"), F.col("embedding").alias("en"))
-    scored = (
+    return (
         cand
         .join(en, "n")
         .join(eq, "q")
         .select("q", "n", cosine_rounded(F.col("eq"), F.col("en")).alias("c"))
     )
-    # r11 (guide §2.3, the semdedup_prune/dedup_keep_best convention,
-    # VERDICT r10 #4): global top-k via sort_array over a per-query
-    # collect_list instead of a row_number window — no full Sort of the
-    # candidate stream, map-side partial combining, and the n-keyed
-    # join runs BEFORE the q-keyed one so the final q aggregation can
-    # reuse the q exchange when the joins shuffle (§2.4). Order is the
-    # window's exactly: struct sorts (c DESC, -n DESC) = (c DESC, n
-    # ASC); per-q lists are bounded by P·(k+slack) candidates.
+
+
+def _knn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # memoized: FOUR registry queries (knn_join, hub_vectors,
+    # label_noise_knn, knn_confusion) consume the same O(n²)-tiled pair
+    # computation, and each lazy consumer re-ran the whole pipeline
+    # (~12 s each at sf0.1, r10 measurement)
+    return memo(spark, "knn", sf_dir, build=lambda: _knn_pairs_build(spark, sf_dir))
+
+
+def _knn_pairs_build(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # global top-k via sort_array over a per-query collect_list instead
+    # of a row_number window (guide §2.3, the semdedup_prune /
+    # dedup_keep_best convention): no full Sort of the candidate
+    # stream, map-side partial combining, and the n-keyed join runs
+    # BEFORE the q-keyed one so this q aggregation can reuse the q
+    # exchange when the joins shuffle (§2.4). Order is the window's
+    # exactly: struct sorts (c DESC, -n DESC) = (c DESC, n ASC).
     return (
-        scored.groupBy("q")
+        _tile_pairs(spark, sf_dir, k=_KNN_K)
+        .groupBy("q")
         .agg(
             F.slice(
                 F.sort_array(
@@ -1215,16 +1222,7 @@ ORDER BY h.query_id
 )
 def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = parallelize_scan(load_table(spark, sf_dir, "embeddings"))
-    sigs = emb.select("vec_id", *_sig_spark(F.col("embedding")))
-    tables = F.array(
-        *[
-            F.struct(F.lit(t).alias("t"), F.col(f"sig{t}").alias("key"))
-            for t in range(LSH_TABLES)
-        ]
-    )
-    buckets = sigs.select("vec_id", F.explode(tables).alias("bk")).select(
-        "vec_id", F.col("bk.t").alias("t"), F.col("bk.key").alias("key")
-    )
+    buckets = _lsh_buckets(emb)
     qb = buckets.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "t", "key"
     )
@@ -1939,28 +1937,9 @@ ORDER BY similarity DESC, vec_id LIMIT 5
 )
 def ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = parallelize_scan(load_table(spark, sf_dir, "embeddings"))
-    sigs = emb.select("vec_id", *_sig_spark(F.col("embedding")))
-    tables = F.array(
-        *[
-            F.struct(F.lit(t).alias("t"), F.col(f"sig{t}").alias("key"))
-            for t in range(LSH_TABLES)
-        ]
-    )
-    buckets = sigs.select("vec_id", F.explode(tables).alias("bk")).select(
-        "vec_id", F.col("bk.t").alias("t"), F.col("bk.key").alias("key")
-    )
-    # query signatures recomputed driver-side: same planes, same
-    # sequential fold order (0.0 + x0*y0 + ...) -> bit-identical bits
-    qvec = _qvec_list(spark, sf_dir)
+    buckets = _lsh_buckets(emb)
     probes = []
-    for t in range(LSH_TABLES):
-        acc_bits = []
-        for j in range(LSH_BITS):
-            dot = 0.0
-            for d in range(EMB_DIM):
-                dot = dot + qvec[d] * float(_PLANES[t][j][d])
-            acc_bits.append("1" if dot >= 0 else "0")
-        key = "".join(acc_bits)
+    for t, key in _query_bucket_keys(_qvec_list(spark, sf_dir)):
         probes.append((t, key))
         for j in range(LSH_BITS):  # all Hamming-1 neighbors
             flipped = key[:j] + ("0" if key[j] == "1" else "1") + key[j + 1 :]
@@ -1972,14 +1951,13 @@ def ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id")
         .distinct()
     )
-    qlit = F.expr("array(" + ",".join(f"{x!r}D" for x in qvec) + ")")
     return (
         F.broadcast(cand_ids)
         .join(emb, "vec_id")
         .select(
             "vec_id",
             "label",
-            cosine_rounded(F.col("embedding"), qlit).alias("similarity"),
+            cosine_rounded(F.col("embedding"), _qvec_lit(spark, sf_dir)).alias("similarity"),
         )
         .orderBy(F.desc("similarity"), "vec_id")
         .limit(5)
@@ -2572,6 +2550,19 @@ def _pq_adc_struct(qrow, books1: dict):
     )
 
 
+def _pq_query_batch(emb: DataFrame, books1: dict):
+    """The PQ_NQ query rows in vec_id order (one collect) and the array
+    of their ADC structs over the code columns: the query batch every
+    PQ query scores the corpus against."""
+    qrows = (
+        emb.where(F.col("vec_id") < PQ_NQ)
+        .select("vec_id", "embedding")
+        .orderBy("vec_id")
+        .collect()
+    )
+    return qrows, F.array(*[_pq_adc_struct(qr, books1) for qr in qrows])
+
+
 @register(
     "ann_pq",
     oracle=_pq_oracle(),
@@ -2596,15 +2587,9 @@ def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = parallelize_scan(load_table(spark, sf_dir, "embeddings"))
     books1 = _pq_train_books(emb, sf_dir)
     codes = _pq_encode(emb, books1)
-    qrows = (
-        emb.where(F.col("vec_id") < PQ_NQ)
-        .select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .collect()
-    )
-    per_q = [_pq_adc_struct(qr, books1) for qr in qrows]
+    _, adc = _pq_query_batch(emb, books1)
     scored = codes.select(
-        "vec_id", F.explode(F.array(*per_q)).alias("qa")
+        "vec_id", F.explode(adc).alias("qa")
     ).select(
         F.col("qa.query_id").alias("query_id"), "vec_id", F.col("qa.adc_dist").alias("adc_dist")
     ).where(F.col("vec_id") != F.col("query_id"))
@@ -2766,16 +2751,10 @@ def ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "vec_id")
     )
     # ADC re-score only the candidates: join codes, per-query LUT CASE
-    qrows = (
-        emb.where(F.col("vec_id") < PQ_NQ)
-        .select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .collect()
-    )
-    per_q = [_pq_adc_struct(qr, books1) for qr in qrows]
+    _, adc = _pq_query_batch(emb, books1)
     scored = (
         cand.join(codes, "vec_id")
-        .select("query_id", "vec_id", F.explode(F.array(*per_q)).alias("qa"))
+        .select("query_id", "vec_id", F.explode(adc).alias("qa"))
         .where(F.col("qa.query_id") == F.col("query_id"))
         .select(
             "query_id",
@@ -3012,13 +2991,7 @@ def ann_ivfpq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partition-pruned read of the probed list directories only
     idx = open_parquet(spark, _os.path.join(index_dir, "codes"))
     pruned = idx.where(F.col("ccid").cast("int").isin(all_lists))
-    qrows = (
-        emb.where(F.col("vec_id") < PQ_NQ)
-        .select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .collect()
-    )
-    per_q = [_pq_adc_struct(qr, books1) for qr in qrows]
+    _, adc = _pq_query_batch(emb, books1)
     probe_map = F.expr(
         "map("
         + ",".join(
@@ -3028,7 +3001,7 @@ def ann_ivfpq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         + ")"
     )
     scored = (
-        pruned.select("ccid", "vec_id", F.explode(F.array(*per_q)).alias("qa"))
+        pruned.select("ccid", "vec_id", F.explode(adc).alias("qa"))
         .where(
             F.array_contains(
                 F.element_at(probe_map, F.col("qa.query_id").cast("int")),
@@ -3216,16 +3189,10 @@ def pq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = parallelize_scan(load_table(spark, sf_dir, "embeddings"))
     books1 = _pq_train_books(emb, sf_dir)
     codes = _pq_encode(emb, books1)
-    qrows = (
-        emb.where(F.col("vec_id") < PQ_NQ)
-        .select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .collect()
-    )
-    per_q = [_pq_adc_struct(qr, books1) for qr in qrows]
+    qrows, adc = _pq_query_batch(emb, books1)
     w = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("vec_id"))
     pq_top = (
-        codes.select("vec_id", F.explode(F.array(*per_q)).alias("qa"))
+        codes.select("vec_id", F.explode(adc).alias("qa"))
         .select(
             F.col("qa.query_id").alias("query_id"),
             "vec_id",
@@ -4188,109 +4155,19 @@ ORDER BY vec_a, vec_b
         "nearest cross-group neighbor — the mutual-NN mining pattern "
         "behind parallel-corpus alignment and cross-dataset bridging "
         "(a one-directional best is often asymmetric noise; mutuality "
-        "is the standard precision filter). Scale shape: the "
-        "dedup_embedding/knn_join block tiling — P mod-blocks, each "
-        "(i,j) tile one bounded NumPy matmul that emits only local "
-        "top-(1+slack) cross-group candidates per row, exact-fold "
-        "verify on survivors, per-query argmax aggregation (map-side "
-        "combined, no candidate-stream sort), then the mutuality "
-        "self-join runs on the n-row best table (SURVEY §2.F). No "
-        "driver collect, no corpus broadcast; shuffle carries O(P·k) "
-        "candidate rows per vector; P = ceil(n/4096) grows with the "
-        "corpus."
+        "is the standard precision filter). Scale shape: the knn_join "
+        "block-tile kernel with k = 1 and a cross-group mask — P "
+        "mod-blocks, each (i,j) tile one bounded NumPy matmul that keeps "
+        "each row's cross-group cells within the rounding tolerance of "
+        "its local best (so tied bests all survive), exact-fold verify "
+        "on survivors, per-query argmax aggregation (map-side combined, "
+        "no candidate-stream sort), then the mutuality self-join runs "
+        "on the n-row best table (SURVEY §2.F). No driver collect, no "
+        "corpus broadcast; P = ceil(n/4096) grows with the corpus."
     ),
 )
 def reciprocal_best_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    slack = 8  # local-rank cushion >> any matmul-vs-fold fp divergence
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    # P derived from the corpus (r11, the _knn_pairs convention): one
-    # bounded tile at test scale instead of 36, OOM-safe blocks at 100 TB
-    P = max(1, -(-_n_vectors(spark, sf_dir) // _KNN_BLOCK))
-    blk = F.pmod(F.col("vec_id"), F.lit(P)).cast("int")
-    base = emb.select("vec_id", "embedding", (F.col("label") % 2).alias("grp"), blk.alias("blk"))
-    left = base.select(
-        "vec_id",
-        "embedding",
-        "grp",
-        F.col("blk").alias("pa"),
-        F.explode(F.sequence(F.col("blk"), F.lit(P - 1))).alias("pb"),
-        F.lit(0).alias("role"),
-    )
-    right = base.select(
-        "vec_id",
-        "embedding",
-        "grp",
-        F.explode(F.sequence(F.lit(0), F.col("blk"))).alias("pa"),
-        F.col("blk").alias("pb"),
-        F.lit(1).alias("role"),
-    )
-
-    def tile(pdf):
-        import numpy as np
-        import pandas as pd
-
-        a = pdf[pdf["role"] == 0]
-        b = pdf[pdf["role"] == 1]
-        if a.empty or b.empty:
-            return pd.DataFrame({"q": [], "n": []}).astype("int64")
-
-        def unit(rows):
-            m = np.stack(rows["embedding"].to_numpy()).astype(np.float64)
-            nrm = np.linalg.norm(m, axis=1)
-            nrm[nrm == 0] = 1.0
-            return m / nrm[:, None]
-
-        a_ids = a["vec_id"].to_numpy()
-        b_ids = b["vec_id"].to_numpy()
-        sims = unit(a) @ unit(b).T
-        # only cross-group pairs compete; same-group cells drop out
-        same = a["grp"].to_numpy()[:, None] == b["grp"].to_numpy()[None, :]
-        sims[same] = -np.inf
-        sims[a_ids[:, None] == b_ids[None, :]] = -np.inf
-        kk = 1 + slack
-        qs, ns = [], []
-        # the diagonal tile holds the same rows in both roles, so one
-        # direction covers it; off-diagonal tiles emit both directions
-        for ids_q, ids_n, s in (
-            (a_ids, b_ids, sims),
-            (b_ids, a_ids, sims.T) if a.iloc[0]["pa"] != a.iloc[0]["pb"] else (None, None, None),
-        ):
-            if ids_q is None:
-                continue
-            # vectorized local top-(1+slack) (r11, the _knn_pairs
-            # kernel): argpartition + NumPy flatten, no per-row loop
-            kk_eff = min(kk, s.shape[1])
-            if kk_eff < s.shape[1]:
-                top = np.argpartition(-s, kk_eff - 1, axis=1)[:, :kk_eff]
-            else:
-                top = np.broadcast_to(np.arange(s.shape[1]), s.shape).copy()
-            vals = np.take_along_axis(s, top, axis=1)
-            mask = np.isfinite(vals)
-            qs.append(np.repeat(ids_q, mask.sum(axis=1)))
-            ns.append(ids_n[top[mask]])
-        return pd.DataFrame({
-            "q": np.concatenate(qs) if qs else np.empty(0, dtype="int64"),
-            "n": np.concatenate(ns) if ns else np.empty(0, dtype="int64"),
-        })
-
-    # no distinct(): each ordered pair comes from exactly one
-    # (tile, direction) — the _knn_pairs proof applies verbatim
-    cand = (
-        left.unionByName(right)
-        .groupBy("pa", "pb")
-        .applyInPandas(tile, schema="q long, n long")
-    )
-
-    # no broadcast hint on the O(n·k) candidate stream (see knn_join)
-    eq = emb.select(F.col("vec_id").alias("q"), F.col("embedding").alias("eq"))
-    en = emb.select(F.col("vec_id").alias("n"), F.col("embedding").alias("en"))
-    scored = (
-        cand
-        .join(en, "n")
-        .join(eq, "q")
-        .select("q", "n", cosine_rounded(F.col("eq"), F.col("en")).alias("c"))
-    )
+    scored = _tile_pairs(spark, sf_dir, k=1, group=F.col("label") % 2)
     # per-query argmax (c DESC, n ASC) as one aggregation with map-side
     # partial combining (guide §2.3; the langid/semdedup convention) —
     # the row_number window cost a full sort of the candidate stream
@@ -7114,16 +6991,7 @@ ORDER BY q.query_id
 )
 def range_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = parallelize_scan(load_table(spark, sf_dir, "embeddings"))
-    sigs = emb.select("vec_id", *_sig_spark(F.col("embedding")))
-    tables = F.array(
-        *[
-            F.struct(F.lit(t).alias("t"), F.col(f"sig{t}").alias("key"))
-            for t in range(LSH_TABLES)
-        ]
-    )
-    buckets = sigs.select("vec_id", F.explode(tables).alias("bk")).select(
-        "vec_id", F.col("bk.t").alias("t"), F.col("bk.key").alias("key")
-    )
+    buckets = _lsh_buckets(emb)
     qb = buckets.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "t", "key"
     )

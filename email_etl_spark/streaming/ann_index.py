@@ -25,27 +25,9 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 DELTA_SUBDIR = "_deltas"
 BASE_SUBDIR = "base"
-
-
-def _bucketize(vectors: DataFrame) -> DataFrame:
-    """(vec_id, embedding) → one (vec_id, t, key) row per LSH table —
-    the same plan-constant hyperplane signatures as the batch index."""
-    from email_etl_spark.plans.search import LSH_TABLES, _sig_spark
-
-    sigs = vectors.select("vec_id", *_sig_spark(F.col("embedding")))
-    tables = F.array(
-        *[
-            F.struct(F.lit(t).alias("t"), F.col(f"sig{t}").alias("key"))
-            for t in range(LSH_TABLES)
-        ]
-    )
-    return sigs.select("vec_id", F.explode(tables).alias("bk")).select(
-        "vec_id", F.col("bk.t").alias("t"), F.col("bk.key").alias("key")
-    )
 
 
 def run_ann_index_stream(
@@ -54,11 +36,15 @@ def run_ann_index_stream(
     """Consume a streaming DataFrame of (vec_id, embedding) and append
     signature deltas under <index_root>/_deltas/epoch=<n>. Overwrite-
     per-epoch makes batch retries idempotent; availableNow makes the
-    same code a bounded backfill."""
+    same code a bounded backfill. Signatures come from the batch
+    index's bucket builder (plans/search.py::_lsh_buckets), so delta and
+    base rows agree bit for bit."""
+
+    from email_etl_spark.plans.search import _lsh_buckets
 
     def write_batch(batch: DataFrame, epoch_id: int) -> None:
         out = os.path.join(index_root, DELTA_SUBDIR, f"epoch={epoch_id}")
-        _bucketize(batch).write.mode("overwrite").parquet(out)
+        _lsh_buckets(batch).write.mode("overwrite").parquet(out)
 
     q = (
         vectors.writeStream.foreachBatch(write_batch)

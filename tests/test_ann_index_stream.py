@@ -8,8 +8,8 @@ import shutil
 
 from pyspark.sql import functions as F
 
+from email_etl_spark.plans.search import _lsh_buckets
 from email_etl_spark.streaming.ann_index import (
-    _bucketize,
     compact_ann_index,
     read_ann_index,
     run_ann_index_stream,
@@ -58,7 +58,7 @@ def test_stream_deltas_compact_and_serve(spark, tmp_path):
     batch = load_table(spark, SF_SMOKE, "embeddings").where(F.col("vec_id") < 3)
     expect = {
         (r.vec_id, r.t, r.key)
-        for r in _bucketize(batch.select("vec_id", "embedding")).collect()
+        for r in _lsh_buckets(batch.select("vec_id", "embedding")).collect()
     }
     assert {(r.vec_id, r.t, r.key) for r in got.collect()} == expect
 
@@ -85,8 +85,8 @@ def test_epoch_overwrite_is_idempotent(spark, tmp_path):
     _drop_vectors(spark, src, [0, 1], "d1")
     batch = spark.read.parquet(src)
     out = os.path.join(root, "_deltas", "epoch=0")
-    _bucketize(batch).write.mode("overwrite").parquet(out)
-    _bucketize(batch).write.mode("overwrite").parquet(out)  # the retry
+    _lsh_buckets(batch).write.mode("overwrite").parquet(out)
+    _lsh_buckets(batch).write.mode("overwrite").parquet(out)  # the retry
     got = read_ann_index(spark, root)
     assert got.count() == 2 * 4  # no duplicates
 

@@ -126,47 +126,6 @@ def test_connected_components_chain(spark):
     assert len(comp) == n + 1
 
 
-def test_vector_kernels_bit_identical(spark):
-    """The Arrow scale kernels (cosine_fast, sign_bits_fast) must be
-    BIT-identical to the JVM folds on every corpus pair — that is the
-    invariant that makes SPARK_GRAFT_VECTOR_KERNEL a pure physical
-    switch with no parity consequences."""
-    from pyspark.sql import functions as F
-
-    from email_etl_spark.functions.hashing import hyperplanes
-    from email_etl_spark.functions.vectors import cosine, cosine_fast, sign_bits_fast
-    from email_etl_spark.io import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    b = emb.select(F.col("embedding").alias("e2"))
-    pairs = emb.crossJoin(F.broadcast(b))
-    mism = pairs.where(
-        cosine(F.col("embedding"), F.col("e2"))
-        != cosine_fast(F.col("embedding"), F.col("e2"))
-    ).count()
-    assert mism == 0
-
-    planes = [[float(v) for v in row] for tbl in hyperplanes(4, 8, 64) for row in tbl]
-    planes_lit = F.lit(planes)
-    jvm_bits = F.array_join(
-        F.transform(
-            planes_lit,
-            lambda plane: F.when(
-                F.aggregate(
-                    F.zip_with(F.col("embedding"), plane, lambda x, y: x.cast("double") * y),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                )
-                >= 0,
-                F.lit("1"),
-            ).otherwise(F.lit("0")),
-        ),
-        "",
-    )
-    mism2 = emb.where(jvm_bits != sign_bits_fast(F.col("embedding"), planes)).count()
-    assert mism2 == 0
-
-
 def test_pii_scrub_idempotent(spark):
     """Scrubbing already-scrubbed text is a no-op: placeholders never
     re-match any PII pattern, and counts on the scrubbed text are 0."""
