@@ -68,9 +68,9 @@ def derived_attachment_emails(docs: DataFrame) -> DataFrame:
     content, content_hash}>), every attribute md5-derived so the oracle
     replays it exactly. The array is built row-locally (transform over
     a sequence) — zero shuffles before validation explodes it."""
-    magic_bins = F.array(
-        *[F.lit(bytes.fromhex(h) if h else b"") for h in _MAGIC_HEX]
-    )
+    # hex strings, unhexed after selection: binary literals print as
+    # JVM identity hashes ([B@…), so the plan text would differ per build
+    magic_hex = F.array(*[F.lit(h) for h in _MAGIC_HEX])
     exts = F.array(*[F.lit(e) for e in _EXTS])
     declared = F.array(*[F.lit(m) for m in _DECLARED])
     doc_id = F.col("doc_id")
@@ -81,7 +81,7 @@ def derived_attachment_emails(docs: DataFrame) -> DataFrame:
                 F.lit("att:"), doc_id.cast("string"), F.lit(":"), j.cast("string")
             )
         )
-        content = F.element_at(magic_bins, _b_col(h, 2) % 5 + 1)
+        content = F.unhex(F.element_at(magic_hex, _b_col(h, 2) % 5 + 1))
         return F.struct(
             F.concat(
                 F.lit("doc"),

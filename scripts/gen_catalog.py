@@ -10,8 +10,11 @@ import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
+OUT = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "QUERIES.md")
 
-def main() -> None:
+
+def render() -> str:
+    """The QUERIES.md text for the current registry."""
     from email_etl_spark.plans.registry import REGISTRY
 
     lines = [
@@ -38,10 +41,13 @@ def main() -> None:
             f"| {name} | {mod} | {'yes' if q.oracle else 'rows-only'} | "
             f"{'yes' if q.headline else ''} | {doc} |"
         )
-    out = os.path.join(os.path.dirname(__file__), "..", "QUERIES.md")
-    with open(out, "w") as fh:
-        fh.write("\n".join(lines) + "\n")
-    print(f"wrote QUERIES.md ({len(REGISTRY)} queries)")
+    return "\n".join(lines) + "\n"
+
+
+def main() -> None:
+    with open(OUT, "w") as fh:
+        fh.write(render())
+    print("wrote QUERIES.md")
 
 
 if __name__ == "__main__":

@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """Engine-only timing sweep over the whole registry (guide §1:
-measure first). FULL_SF01's `secs` column times Spark+DuckDB compare
+measure first). SWEEP.json's `secs` column times Spark+DuckDB compare
 together, so it cannot rank engine cost; this times builder+collect
 (the bench methodology) per registry query on the bench session and
 dumps one JSON file for straggler triage.

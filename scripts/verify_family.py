@@ -5,8 +5,8 @@ optimization (r10 discipline):
 - at sf0.001 and sf0.01: full DuckDB-oracle compare (the driver-gate
   mirror), so any output change is caught against the contract;
 - at sf0.1 (no oracle run needed): the Spark side's per-column value
-  hashes are recomputed and diffed against the committed
-  DEDUP_SF01/FULL_SF01/LATE_SF01 col_hashes, which were recorded from
+  hashes are recomputed and diffed against the col_hashes of the
+  committed SWEEP.json sf0.1 rows, which were recorded from
   oracle-green runs — equal hashes == identical output multiset.
 
 Usage: python scripts/verify_family.py q1 q2 ...   (or: -f listfile)
@@ -23,15 +23,12 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 ROOT = os.path.join(os.path.dirname(__file__), "..")
 
 
-def committed_col_hashes(name: str):
-    for art in ("DEDUP_SF01.json", "FULL_SF01.json", "LATE_SF01.json"):
-        p = os.path.join(ROOT, art)
-        if not os.path.exists(p):
-            continue
-        rec = json.load(open(p)).get("results", {}).get(name)
-        if rec and rec.get("status") == "ok" and rec.get("col_hashes"):
-            return art, rec["col_hashes"]
-    return None, None
+def committed_col_hashes(name: str) -> dict | None:
+    with open(os.path.join(ROOT, "SWEEP.json")) as fh:
+        rec = json.load(fh).get("sf0.1", {}).get("rows", {}).get(name)
+    if rec and rec["status"] == "ok" and rec.get("col_hashes"):
+        return rec["col_hashes"]
+    return None
 
 
 def main() -> int:
@@ -43,7 +40,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     from email_etl_spark.plans.registry import REGISTRY
-    from tests.oracle import column_hashes, compare, run_spark
+    from tests.oracle import column_hashes, compare, run_oracle, run_spark
 
     bad = 0
     for name in names:
@@ -51,21 +48,22 @@ def main() -> int:
         for sf_dir in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
             if q.oracle is None:
                 print(f"{name} {sf_dir}: no-oracle"); continue
-            problems = compare(name, spark, sf_dir, q.builder, q.oracle)
+            oracle = run_oracle(q.oracle, sf_dir)
+            problems = compare(name, spark, sf_dir, q.builder, q.oracle, oracle)
             tag = "ok" if not problems else f"FAIL {problems}"
             print(f"{name} {os.path.basename(sf_dir)}: {tag}", flush=True)
             bad += bool(problems)
-        art, want = committed_col_hashes(name)
+        want = committed_col_hashes(name)
         if want is None:
             print(f"{name} sf0.1: no committed col_hashes; SKIP", flush=True)
             continue
         cols, rows = run_spark(q.builder, spark, "/root/testdata/sf0.1")
         got = column_hashes(cols, rows)
         if got == want:
-            print(f"{name} sf0.1: ok (matches {art})", flush=True)
+            print(f"{name} sf0.1: ok (matches SWEEP.json)", flush=True)
         else:
             diff = {c: (got.get(c), want.get(c)) for c in set(got) | set(want) if got.get(c) != want.get(c)}
-            print(f"{name} sf0.1: FAIL vs {art} diff={diff}", flush=True)
+            print(f"{name} sf0.1: FAIL vs SWEEP.json diff={diff}", flush=True)
             bad += 1
     print(f"verify_family: {bad} failures")
     return 1 if bad else 0

@@ -94,15 +94,24 @@ def run_oracle(sql: str, sf_dir: str):
 
 
 def compare(
-    name: str, spark, sf_dir: str, builder, sql: str, record: dict | None = None
+    name: str,
+    spark,
+    sf_dir: str,
+    builder,
+    sql: str,
+    oracle: tuple[list[str], list[tuple]],
+    record: dict | None = None,
 ) -> list[str]:
-    """Return a list of mismatch descriptions (empty = pass). When
-    `record` is passed, the Spark side's per-column value hashes are
-    stored under record['col_hashes'] so sweep artifacts localize a
-    future divergence to its column."""
+    """Return a list of mismatch descriptions (empty = pass). `oracle`
+    is the oracle's `(columns, rows)` result — `run_oracle(sql,
+    sf_dir)`, or the same taken under a timeout by the sweep; `sql`
+    is still read for its declared output types. When `record` is
+    passed, the Spark side's per-column value hashes are stored under
+    record['col_hashes'] so sweep artifacts localize a future
+    divergence to its column."""
     problems: list[str] = []
     s_cols, s_rows = run_spark(builder, spark, sf_dir)
-    o_cols, o_rows = run_oracle(sql, sf_dir)
+    o_cols, o_rows = oracle
     # declared-type guard (r10 driver red, root-caused r11): DuckDB
     # DECIMAL/HUGEINT output columns render as float64 in pandas-layer
     # clients ('2592860.0') while Spark ships exact digits, so a
@@ -140,8 +149,9 @@ def compare(
     s_can = canonical_rows(s_cols, s_rows)
     o_can = canonical_rows(o_cols, o_rows)
     if s_can != o_can:
-        diff_s = [r for r in s_can if r not in set(o_can)][:3]
-        diff_o = [r for r in o_can if r not in set(s_can)][:3]
+        s_set, o_set = set(s_can), set(o_can)
+        diff_s = [r for r in s_can if r not in o_set][:3]
+        diff_o = [r for r in o_can if r not in s_set][:3]
         # name the divergent column(s) directly (VERDICT r9 #5)
         sh, oh = column_hashes(s_cols, s_rows), column_hashes(o_cols, o_rows)
         bad_cols = sorted(c for c in sh if sh[c] != oh.get(c))

@@ -30,7 +30,7 @@ from email_etl_spark.cache import invalidate_under
 from email_etl_spark.io import TABLES
 from email_etl_spark.plans.registry import REGISTRY
 from tests.conftest import SF_SMOKE
-from tests.oracle import compare
+from tests.oracle import compare, run_oracle
 
 QUERIES = ("knn_join", "hub_vectors", "reciprocal_best_match", "dedup_embedding")
 
@@ -90,7 +90,8 @@ def test_exact_knn_queries_match_the_oracle_on_ties(spark, corpus):
             S._KNN_BLOCK = block
             for name in QUERIES:
                 q = REGISTRY[name]
-                problems = compare(name, spark, root, q.builder, q.oracle)
+                oracle = run_oracle(q.oracle, root)
+                problems = compare(name, spark, root, q.builder, q.oracle, oracle)
                 assert not problems, f"block={block}: " + "\n".join(problems)
     finally:
         S._KNN_BLOCK = old_block

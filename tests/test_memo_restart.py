@@ -56,7 +56,7 @@ _RESTART = """
 import json, sys
 from email_etl_spark.plans.registry import REGISTRY
 from email_etl_spark.session import get_spark
-from tests.oracle import compare
+from tests.oracle import compare, run_oracle
 
 sf_dir, names = sys.argv[1], json.loads(sys.argv[2])
 problems = {}
@@ -68,7 +68,8 @@ for n in range(2):
             if n == 0:  # first session: populate the memo
                 q.builder(spark, sf_dir).collect()
                 continue
-            found = compare(name, spark, sf_dir, q.builder, q.oracle)
+            oracle = run_oracle(q.oracle, sf_dir)
+            found = compare(name, spark, sf_dir, q.builder, q.oracle, oracle)
         except Exception as exc:
             found = [f"{type(exc).__name__}: {str(exc).strip().splitlines()[0][:300]}"]
         problems.setdefault(name, []).extend(f"session {n}: {p}" for p in found)

@@ -34,10 +34,12 @@ def test_refresh_plan_reads_snapshot_and_pushes_delta_filter(spark):
 
 
 def test_refresh_matches_full_recompute_oracle(spark):
-    from tests.oracle import compare
+    from tests.oracle import compare, run_oracle
 
     q = REGISTRY["mv_refresh_delta"]
-    err = compare("mv_refresh_delta", spark, SF, q.builder, q.oracle)
+    err = compare(
+        "mv_refresh_delta", spark, SF, q.builder, q.oracle, run_oracle(q.oracle, SF)
+    )
     assert not err, err
 
 

@@ -7,7 +7,7 @@ import pytest
 
 from email_etl_spark.plans.registry import REGISTRY
 from tests.conftest import SF_SMOKE
-from tests.oracle import compare
+from tests.oracle import compare, run_oracle
 
 ORACLE_QUERIES = sorted(name for name, q in REGISTRY.items() if q.oracle)
 
@@ -15,7 +15,9 @@ ORACLE_QUERIES = sorted(name for name, q in REGISTRY.items() if q.oracle)
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
 def test_parity_smoke_sf(spark, name):
     q = REGISTRY[name]
-    problems = compare(name, spark, SF_SMOKE, q.builder, q.oracle)
+    problems = compare(
+        name, spark, SF_SMOKE, q.builder, q.oracle, run_oracle(q.oracle, SF_SMOKE)
+    )
     assert not problems, "\n".join(problems)
 
 

@@ -8,6 +8,8 @@ from __future__ import annotations
 
 import re
 
+import pytest
+
 from tests.conftest import SF_SMOKE
 
 # queries whose BNL is a deliberate broadcast of a 1-to-20-row side
@@ -236,6 +238,8 @@ _BNL_JUSTIFIED = {
     "cramers_v_type_weekday",  # 1-row N + nr/nc count broadcasts onto the 5x7 cell table
     "uncertainty_coeff_type_hour",  # 1-row N/MI/H(t)/H(h) broadcasts on the 5x24 cell table
     "grubbs_outlier_daily",  # 1-row (n, sum, sumsq) moments broadcast onto the day rollup
+    # reviewed with the regenerated PLANS.md (the row was stale before)
+    "dedup_method_agreement",  # 1-row method totals onto the 3-row method-pair list
 }
 
 
@@ -314,3 +318,25 @@ def test_no_broadcast_hint_on_candidate_pair_streams():
                 if "F.broadcast(cand)" in ln or "F.broadcast(pairs)" in ln:
                     offenders.append(f"{f.name}:{i}: {ln.strip()}")
     assert not offenders, offenders
+
+
+def _plan_text(df) -> str:
+    """Optimized plan text with the per-build fresh names normalized:
+    exprIds (`#123`) and lambda variables (`x_7`)."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return re.sub(r"\b(lambda \w+?)_\d+", r"\1", re.sub(r"#\d+L?", "#", plan))
+
+
+@pytest.mark.parametrize(
+    "name", ["attachment_mime_stats", "attachment_risk_by_source"]
+)
+def test_plan_text_is_identical_across_builds(spark, name):
+    """Two builds of one query print the same plan, so plan diffs and
+    plan audits show real changes only. A binary literal broke this:
+    its plan text is a JVM identity hash (`[B@4005b487`)."""
+    from email_etl_spark.plans.registry import REGISTRY
+
+    first, second = (
+        _plan_text(REGISTRY[name].builder(spark, SF_SMOKE)) for _ in range(2)
+    )
+    assert first == second
